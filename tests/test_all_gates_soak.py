@@ -119,6 +119,9 @@ def soak(spark, gate_web, tmp_path_factory):
         url_blocklist=["bad.example"],
         url_word_weights={"casino": 0.6, "poker": 0.5},
         seen_filter="cuckoo",
+        # 0 puts the cuckoo pre-pass on every round (it is size-gated
+        # on this cap) and the wave joins on the shuffle-hash fallback
+        wave_broadcast_max_rows=0,
         salt_n=2,
         compact_seen_every=6,
         gc_keep_rounds=4,

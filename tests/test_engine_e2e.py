@@ -192,9 +192,14 @@ def test_many_hosts_round(spark):
 
 def test_bloom_path_equivalent(spark, pages):
     """O5: Bloom pre-filtered J1 produces the identical crawl (no false
-    drops — SURVEY.md §7.4(4))."""
+    drops — SURVEY.md §7.4(4)). wave_broadcast_max_rows=0 puts every
+    round's seen past the gate, so the pre-pass really runs."""
     eng = CrawlEngine(
-        spark, pages, config=CrawlConfig(max_rounds=40, use_bloom=True)
+        spark,
+        pages,
+        config=CrawlConfig(
+            max_rounds=40, use_bloom=True, wave_broadcast_max_rows=0
+        ),
     )
     eng.run(seeds_df(spark))
     plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
@@ -209,7 +214,11 @@ def test_cuckoo_path_equivalent(spark, pages):
     """O5 cuckoo variant: same identical-crawl guarantee as the Bloom
     pre-pass (tests/test_cuckoo.py pins the filter's own properties)."""
     eng = CrawlEngine(
-        spark, pages, config=CrawlConfig(max_rounds=40, seen_filter="cuckoo")
+        spark,
+        pages,
+        config=CrawlConfig(
+            max_rounds=40, seen_filter="cuckoo", wave_broadcast_max_rows=0
+        ),
     )
     eng.run(seeds_df(spark))
     plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
@@ -218,6 +227,49 @@ def test_cuckoo_path_equivalent(spark, pages):
         {(r["url"], r["fetched"]) for r in eng.seen().collect()}
         == {(r["url"], r["fetched"]) for r in plain.seen().collect()}
     )
+
+
+def test_seen_prefilter_runs_only_past_the_broadcast_gate(
+    spark, pages, monkeypatch
+):
+    """J1's probabilistic pre-pass is size-gated: while seen fits
+    wave_broadcast_max_rows the round runs the plain exact anti-join
+    and never calls a pre-pass; past the gate every round
+    calls the configured one."""
+    import webcrawler_spark.engine as engine
+    import webcrawler_spark.operators.cuckoo as cuckoo
+
+    calls = []
+
+    def spy(name, fn):
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        engine, "anti_join_with_bloom", spy("bloom", engine.anti_join_with_bloom)
+    )
+    monkeypatch.setattr(
+        cuckoo, "anti_join_with_cuckoo", spy("cuckoo", cuckoo.anti_join_with_cuckoo)
+    )
+    for f in ("bloom", "cuckoo"):
+        CrawlEngine(
+            spark, pages, config=CrawlConfig(max_rounds=2, seen_filter=f)
+        ).run(seeds_df(spark))
+    assert calls == []
+    for f in ("bloom", "cuckoo"):
+        history = CrawlEngine(
+            spark,
+            pages,
+            config=CrawlConfig(
+                max_rounds=2, seen_filter=f, wave_broadcast_max_rows=0
+            ),
+        ).run(seeds_df(spark))
+        assert len(history) == 2
+        assert calls == [f, f]
+        calls.clear()
 
 
 def test_apply_in_pandas_politeness_equivalent(spark, pages):

@@ -118,6 +118,55 @@ def test_other_modes_complete_with_identical_coverage(
     assert set(_fetch_rounds(eng)) == set(fifo_rounds)
 
 
-def test_unknown_mode_raises(spark, rank_web):
+def test_unknown_mode_raises():
+    # at construction, before any round runs
     with pytest.raises(ValueError, match="priority_mode"):
-        _crawl(spark, rank_web, priority_mode="bogus")
+        CrawlConfig(priority_mode="bogus", hosts_per_round=N_SEEDS)
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"priority_mode": "pagerank"}, "hosts_per_round"),
+        ({"seen_filter": "blom"}, "seen_filter"),
+        ({"fetch_executor": "pandas"}, "fetch_executor"),
+    ],
+)
+def test_bad_config_fails_at_construction(kwargs, match):
+    with pytest.raises(ValueError, match=match):
+        CrawlConfig(**kwargs)
+
+
+def test_recrawl_rank_counts_each_url_once(spark, rank_web):
+    """A host's recrawl rank is the mean p_stale over its distinct
+    urls: a url fetched in two rounds must not weigh twice."""
+    from webcrawler_spark.operators.recrawl import recrawl_priority
+
+    pages, _ = rank_web
+    h = "https://h.example"
+    fetched = spark.createDataFrame(
+        [
+            (f"{h}/a", h, 0, "v1"),
+            (f"{h}/a", h, 1, "v2"),  # refetched, content changed
+            (f"{h}/b", h, 0, "v1"),
+        ],
+        "url string, host string, round int, text string",
+    )
+    eng = CrawlEngine(
+        spark,
+        pages,
+        config=CrawlConfig(priority_mode="recrawl", hosts_per_round=1),
+    )
+    eng.cat.append("pages_fetched", fetched)
+    eng.state.round = 2
+    eng._refresh_host_ranks()
+    (row,) = eng._rank_df.collect()
+
+    hist = fetched.select("url", "round", F.md5("text").alias("digest"))
+    p = {
+        r["url"]: r["p_stale"]
+        for r in recrawl_priority(hist, now_round=2).collect()
+    }
+    assert p[f"{h}/a"] != p[f"{h}/b"]
+    assert row["host"] == h
+    assert row["rank_score"] == pytest.approx((p[f"{h}/a"] + p[f"{h}/b"]) / 2)

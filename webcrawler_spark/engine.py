@@ -39,8 +39,9 @@ Scale design (10^10 URLs, 1000 executors):
   fetched rows* — the reference's HEAD-before-GET two-phase fetch
   becomes column pruning (O2).
 * the seen anti-join takes the partitioned-Bloom pre-pass (O5) when
-  ``use_bloom``; mega-host skew is broken by two-phase salted FIFO
-  selection (O9) when ``salt_n > 1``.
+  ``use_bloom`` and seen outgrows ``wave_broadcast_max_rows``; mega-host
+  skew is broken by two-phase salted FIFO selection (O9) when
+  ``salt_n > 1``.
 """
 
 from __future__ import annotations
@@ -103,10 +104,12 @@ class CrawlConfig:
     round_window: float = 3.0            # virtual seconds per round (W4 budget)
     n_buckets: int = 8                   # host-hash bucket count (O12)
     use_bloom: bool = False              # O5 seen pre-filter
-    # O5 variant selector: None defers to use_bloom; "bloom" | "cuckoo"
-    # pick the probabilistic pre-pass (cuckoo supports deletion —
-    # operators/cuckoo.py — for revisit policies); both are routing
-    # accelerators over the same exact anti-join semantics.
+    # O5 variant selector: None defers to use_bloom; "exact" | "bloom" |
+    # "cuckoo" pick the J1 seen anti-join (cuckoo supports deletion —
+    # operators/cuckoo.py — for revisit policies); both pre-passes are
+    # routing accelerators over the same exact anti-join semantics, and
+    # they run only once seen holds more than wave_broadcast_max_rows
+    # rows — below that J1 is the plain exact anti-join.
     seen_filter: Optional[str] = None
     salt_n: int = 1                      # O9 two-phase FIFO selection fan
     # trap filtering (opt-in; default OFF preserves reference-ordering
@@ -152,13 +155,14 @@ class CrawlConfig:
     #     (pages_fetched src-host → link-host edges, operators/graph);
     #   "recrawl" — Cho–Garcia-Molina staleness (operators/recrawl):
     #     hosts whose pages are oldest/most-changed rank first.
-    # Hosts absent from the rank table (not yet linked-to) sort after
-    # every ranked host, FIFO among themselves. Scale note: refresh
-    # cost is one scan of pages_fetched's links every k rounds; at
-    # 10^10 pages a deployment appends a per-round host-edge delta
-    # table instead and ranks over that (same operators, incremental
-    # input) — the rank loop itself is the bucketed per-iteration
-    # shuffle audited in operators/graph.
+    # A mode other than "fifo" needs hosts_per_round (checked at
+    # construction). Hosts absent from the rank table (not yet
+    # linked-to) sort after every ranked host, FIFO among themselves.
+    # Scale note: refresh cost is one scan of pages_fetched's links
+    # every k rounds; at 10^10 pages a deployment appends a per-round
+    # host-edge delta table instead and ranks over that (same
+    # operators, incremental input) — the rank loop itself is the
+    # bucketed per-iteration shuffle audited in operators/graph.
     priority_mode: str = "fifo"
     priority_refresh_rounds: int = 4
     priority_rank_iters: int = 5
@@ -198,9 +202,30 @@ class CrawlConfig:
     # stops broadcasting it and falls back to a shuffle-hash join. A
     # round wave is hosts × max_urls_per_host_per_round and is unbounded
     # at 10^10-URL scale; past this cap a broadcast would exceed driver/
-    # executor memory and fail the round. 0 forces the fallback path
-    # everywhere (used by the equivalence test).
+    # executor memory and fail the round. The same value is the seen
+    # size past which J1 runs the use_bloom/seen_filter pre-pass (below
+    # it J1 is the plain exact anti-join). 0 forces the shuffle-hash
+    # fallback everywhere and turns the pre-pass on every round (used
+    # by the equivalence tests).
     wave_broadcast_max_rows: int = 4_000_000
+
+    def __post_init__(self) -> None:
+        # fail at construction, not rounds into a crawl
+        for name, allowed in (
+            ("priority_mode", ("fifo", "pagerank", "opic", "recrawl")),
+            ("seen_filter", (None, "exact", "bloom", "cuckoo")),
+            ("fetch_executor", ("native", "apply_in_pandas")),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"unknown {name} {getattr(self, name)!r}"
+                    f" (expected one of {allowed})"
+                )
+        if self.priority_mode != "fifo" and self.hosts_per_round is None:
+            raise ValueError(
+                f"priority_mode {self.priority_mode!r} orders the"
+                " host-limited wave and needs hosts_per_round"
+            )
 
     @staticmethod
     def sequential_parity_mode(limit: Optional[int] = None) -> "CrawlConfig":
@@ -236,9 +261,9 @@ class CrawlState:
     pending_medium: Optional[float] = None
     # row count of the committed frontier snapshot, observed for free
     # on the overwrite (Observation API) — makes the D4 quiescence
-    # check a dict lookup instead of a per-round isEmpty() job.
-    # None ⇒ unknown (fresh init / pre-upgrade manifest): fall back to
-    # isEmpty() once.
+    # check a dict lookup instead of a per-round isEmpty() job (init
+    # observes the seed frontier the same way). None ⇒ unknown
+    # (pre-upgrade manifest): fall back to isEmpty() once.
     frontier_rows: Optional[int] = None
     # frontier rows whose host had NOT been admitted (host_state) when
     # the snapshot was written — observed for free on the same
@@ -517,7 +542,15 @@ class CrawlEngine:
         )
         if self.cfg.use_sitemaps:
             fr = fr.unionByName(self._sitemap_seeds(fr))
-        self.cat.overwrite("frontier", fr.repartition("bucket"))
+        from pyspark.sql import Observation
+
+        # the seed count rides the frontier write: round 0's D4 check
+        # then needs no isEmpty() job
+        fr_obs = Observation()
+        self.cat.overwrite(
+            "frontier",
+            fr.repartition("bucket").observe(fr_obs, F.count(F.lit(1)).alias("n")),
+        )
         empty = self.spark.createDataFrame([], _SEEN_SCHEMA)
         self.cat.register_empty("seen", empty)
         self.cat.register_empty(
@@ -534,7 +567,7 @@ class CrawlEngine:
         self.cat.register_empty(
             "host_fetch_n", self.spark.createDataFrame([], _HOST_FETCH_N_SCHEMA)
         )
-        self.state = CrawlState()
+        self.state = CrawlState(frontier_rows=int(fr_obs.get["n"]))
         self.cat.commit_round(-1, self.state.to_json())
 
     def _sitemap_seeds(self, fr: DataFrame) -> DataFrame:
@@ -792,23 +825,21 @@ class CrawlEngine:
                     F.col("node").alias("host"),
                     F.col("importance").alias("rank_score"),
                 )
-        elif cfg.priority_mode == "recrawl":
+        else:  # "recrawl" (CrawlConfig validates the mode)
             from webcrawler_spark.operators.recrawl import recrawl_priority
 
             hist = pages.select(
                 "url", "round", F.md5("text").alias("digest")
             )
             pri = recrawl_priority(hist, now_round=st.round)
+            # one row per url: a page refetched in several rounds
+            # counts once in its host's average
             rank = (
                 pages.select("url", "host")
+                .distinct()
                 .join(pri, "url")
                 .groupBy("host")
                 .agg(F.avg("p_stale").alias("rank_score"))
-            )
-        else:
-            raise ValueError(
-                f"unknown priority_mode {cfg.priority_mode!r}"
-                " (expected fifo | pagerank | opic | recrawl)"
             )
         old = self._rank_df
         self._rank_df = checkpoint(rank)
@@ -1316,14 +1347,28 @@ class CrawlEngine:
         remaining_frontier = self._wave_join(
             frontier, sel.select("url"), "url", "left_anti", int(scal["n_att"] or 0)
         )
-        # J1: never re-attempt (seen) and never double-queue (pending)
+        # J1: never re-attempt (seen) and never double-queue (pending).
+        # seen holds one row per attempt, so the driver knows its size.
+        # The probabilistic pre-pass (a filter build + a Python probe
+        # stage) only pays once seen outgrows the O13 broadcast cap;
+        # below it J1 is the plain exact anti-join and Spark picks the
+        # strategy (a small seen is auto-broadcast). The cap as the
+        # crossover is a proxy: it has not been measured against
+        # seen sizes near it.
+        n_seen = st.total_attempted + int(scal["n_att"] or 0)
         seen_filter = cfg.seen_filter or ("bloom" if cfg.use_bloom else "exact")
+        if n_seen <= cfg.wave_broadcast_max_rows:
+            seen_filter = "exact"
         if seen_filter == "cuckoo":
             from webcrawler_spark.operators.cuckoo import anti_join_with_cuckoo
 
-            new_links = anti_join_with_cuckoo(links, seen, "url")
+            new_links = anti_join_with_cuckoo(
+                links, seen, "url", expected_items=n_seen
+            )
         elif seen_filter == "bloom":
-            new_links = anti_join_with_bloom(links, seen, "url")
+            new_links = anti_join_with_bloom(
+                links, seen, "url", expected_items=n_seen
+            )
         else:
             new_links = links.join(seen.select("url"), "url", "left_anti")
         new_links = new_links.join(

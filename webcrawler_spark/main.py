@@ -32,7 +32,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--resume", action="store_true", help="resume from snapshot")
     p.add_argument("-d", "--debug", action="store_true", help="print debug JSON")
     p.add_argument("--max-rounds", type=int, default=None)
-    p.add_argument("--bloom", action="store_true", help="Bloom seen pre-filter")
+    p.add_argument(
+        "--bloom", action="store_true",
+        help="Bloom seen pre-filter (taken once seen outgrows the"
+        " wave broadcast gate)",
+    )
     p.add_argument("--salt", type=int, default=1, help="mega-host salt fan (O9)")
     p.add_argument(
         "--records-per-file", type=int, default=1000,

@@ -11,11 +11,24 @@ Design:
 
 * A table snapshot = an ordered list of immutable parquet directories
   (``data dirs``).  ``append`` adds one new dir; ``overwrite`` starts a
-  fresh list.  Reading a snapshot = ``spark.read.parquet(*dirs)``.
-* ``manifest.json`` maps ``round -> {table: [dirs...], state: {...}}``
-  plus the small driver scalars (virtual clock, curr_min/max, totals)
-  that the reference kept in locked heap variables
-  (WorkersPipeline.py:24-26) — checkpoint = the manifest row.
+  fresh list.  Reading a snapshot =
+  ``spark.read.schema(s).parquet(*dirs)`` with the schema recorded at
+  the table's last write: a supplied schema skips the footer-scanning
+  schema-inference job Spark otherwise runs on every read (one per
+  catalog read, ~100 ms each on a local session).
+* An empty table (``register_empty``) is schema-only: no data dir, and
+  ``read`` returns an empty frame of the recorded schema — no Spark job
+  until the first real write.
+* ``manifest.json`` maps ``round -> {table: [dirs...], schemas:
+  {table: schema-json}, state: {...}}`` plus the small driver scalars
+  (virtual clock, curr_min/max, totals) that the reference kept in
+  locked heap variables (WorkersPipeline.py:24-26) — checkpoint = the
+  manifest row. Every row repeats the schema of every table, so each
+  round can be read as of itself (time travel, resume); the cost is a
+  manifest that grows by a few KB per retained row and is rewritten on
+  every commit — ``gc_keep_rounds`` bounds it. A row written before
+  schemas were recorded has no ``schemas`` key; its tables are read
+  with schema inference.
 * Two catalogs share the interface:
   - :class:`ParquetCatalog` — durable, resumable (used by the CLI and
     the resumption tests).
@@ -40,8 +53,26 @@ import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from webcrawler_spark.sparkutil import checkpoint, free
+
+
+def _scan(
+    spark: SparkSession, dirs: Optional[list], schema: Optional[StructType]
+) -> Optional[DataFrame]:
+    """Read a table's data dirs with its recorded schema (no inference
+    job), or inferring it when none is recorded; a schema-only table
+    (no dirs) reads as an empty frame, an unknown one as None."""
+    if not dirs:
+        return None if schema is None else spark.createDataFrame([], schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*dirs)
+
+
+def _row_schemas(row: dict) -> dict[str, StructType]:
+    """A manifest row's recorded table schemas ({} for a pre-upgrade row)."""
+    return {t: StructType.fromJson(s) for t, s in row.get("schemas", {}).items()}
 
 
 class MemoryCatalog:
@@ -79,7 +110,7 @@ class MemoryCatalog:
         # scanning them)
         self._lock = threading.Lock()
         self._garbage: list[str] = []
-        self._empty: dict = {}  # name -> schema of a job-free empty table
+        self._schemas: dict[str, StructType] = {}  # name -> last written schema
 
     def _new_dir(self, name: str) -> str:
         with self._lock:
@@ -87,26 +118,20 @@ class MemoryCatalog:
             return os.path.join(self.root, name, f"d{self._seq:06d}")
 
     def read(self, name: str) -> Optional[DataFrame]:
-        dirs = self._dirs.get(name)
-        if not dirs:
-            schema = self._empty.get(name)
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            return None
-        return self.spark.read.parquet(*dirs)
+        return _scan(self.spark, self._dirs.get(name), self._schemas.get(name))
 
     def overwrite(self, name: str, df: DataFrame) -> DataFrame:
         d = self._new_dir(name)
         df.write.parquet(d)
         with self._lock:
-            self._empty.pop(name, None)
+            self._schemas[name] = df.schema
             old = self._dirs.get(name)
             self._dirs[name] = [d]
             if old:
                 # deferred: reclaimed at commit_round, so concurrent
                 # round jobs can still read the replaced snapshot
                 self._garbage.extend(old)
-        return self.spark.read.parquet(d)
+        return _scan(self.spark, [d], df.schema)
 
     def register_empty(self, name: str, df: DataFrame) -> DataFrame:
         """Initialize a table as empty WITHOUT running a Spark job:
@@ -117,7 +142,7 @@ class MemoryCatalog:
         per-round-independent driver fixed cost — the kind that drags
         the big-arm scaling ratio — for zero information."""
         with self._lock:
-            self._empty[name] = df.schema
+            self._schemas[name] = df.schema
             old = self._dirs.pop(name, None)
             if old:
                 self._garbage.extend(old)
@@ -133,6 +158,7 @@ class MemoryCatalog:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(d)
         with self._lock:
+            self._schemas[name] = df.schema
             self._dirs.setdefault(name, []).append(d)
         return self.read(name)
 
@@ -146,8 +172,9 @@ class MemoryCatalog:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(d)
         with self._lock:
+            self._schemas[name] = df.schema
             self._dirs.setdefault(name, []).append(d)
-        return self.spark.read.parquet(d)
+        return _scan(self.spark, [d], df.schema)
 
     def compact(self, name: str) -> Optional[DataFrame]:
         """Merge a table's delta dirs into one snapshot dir. Long
@@ -185,6 +212,7 @@ class ParquetCatalog:
 
         root/
           manifest.json         # {"rounds": [{"round": r, "tables": {...},
+                                #              "schemas": {...},
                                 #              "state": {...}, "ts": ...}]}
           <table>/d000017/...   # immutable data dirs (never rewritten)
 
@@ -208,12 +236,14 @@ class ParquetCatalog:
         os.makedirs(root, exist_ok=True)
         self._manifest_path = os.path.join(root, "manifest.json")
         self._dirs: dict[str, list[str]] = {}
+        self._schemas: dict[str, StructType] = {}
         self._seq = 0
         self._lock = threading.Lock()  # concurrent round-job writes
         self._as_of = as_of_round
         last = self._round_row(as_of_round)
         if last is not None:
             self._dirs = {t: list(ds) for t, ds in last["tables"].items()}
+            self._schemas = _row_schemas(last)
             self._seq = (
                 last["seq"]
                 if as_of_round is None
@@ -262,12 +292,11 @@ class ParquetCatalog:
         (Iceberg time-travel analog; data dirs are immutable so every
         committed snapshot stays readable)."""
         row = self._round_row(round_no)
-        if row is None:
+        if row is None or name not in row["tables"]:
             return None
-        dirs = row["tables"].get(name)
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
+        return _scan(
+            self.spark, row["tables"][name], _row_schemas(row).get(name)
+        )
 
     def commit_round(self, round_no: int, state: dict) -> None:
         """Atomically publish this round's snapshot (write-then-rename)."""
@@ -277,6 +306,9 @@ class ParquetCatalog:
                 "round": round_no,
                 "seq": self._seq,
                 "tables": {t: list(ds) for t, ds in self._dirs.items()},
+                "schemas": {
+                    t: s.jsonValue() for t, s in self._schemas.items()
+                },
                 "state": state,
                 "ts": time.time(),
             }
@@ -298,10 +330,7 @@ class ParquetCatalog:
             return os.path.join(self.root, name, f"d{self._seq:06d}")
 
     def read(self, name: str) -> Optional[DataFrame]:
-        dirs = self._dirs.get(name)
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
+        return _scan(self.spark, self._dirs.get(name), self._schemas.get(name))
 
     def overwrite(self, name: str, df: DataFrame) -> DataFrame:
         d = self._new_dir(name)
@@ -313,14 +342,18 @@ class ParquetCatalog:
         # commit point — so clobbering them is the correct resume.
         df.write.mode("overwrite").parquet(d)
         with self._lock:
+            self._schemas[name] = df.schema
             self._dirs[name] = [d]
-        return self.spark.read.parquet(d)
+        return _scan(self.spark, [d], df.schema)
 
     def register_empty(self, name: str, df: DataFrame) -> DataFrame:
-        """Durable catalogs must materialize even empty snapshots (a
-        resume needs the schema on disk), so this is a plain
-        overwrite; the job-free path exists only on MemoryCatalog."""
-        return self.overwrite(name, df)
+        """Initialize a table as empty without a Spark job: the table
+        gets no data dir, and its schema rides the manifest row, which
+        is all a resume needs to read it back as an empty frame."""
+        with self._lock:
+            self._schemas[name] = df.schema
+            self._dirs[name] = []
+        return self.read(name)
 
     def append(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
         d = self._new_dir(name)
@@ -329,6 +362,7 @@ class ParquetCatalog:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(d)
         with self._lock:
+            self._schemas[name] = df.schema
             self._dirs.setdefault(name, []).append(d)
         return self.read(name)
 
@@ -340,8 +374,9 @@ class ParquetCatalog:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(d)
         with self._lock:
+            self._schemas[name] = df.schema
             self._dirs.setdefault(name, []).append(d)
-        return self.spark.read.parquet(d)
+        return _scan(self.spark, [d], df.schema)
 
     def compact(self, name: str) -> Optional[DataFrame]:
         """Merge delta dirs into one snapshot dir (manifest keeps old
