@@ -680,15 +680,17 @@ def _q_image_dhash_jpeg(spark, sf):
     """JPEG decode VALUE-CHECKED end-to-end (round-4 verdict ask #3):
     the image_dhash_png construction with the base image shipped as a
     baseline JFIF — near-lossless all-ones quantization, 4:2:0 chroma
-    subsampling AND restart markers every 2 MCUs, so a match drives
-    the Huffman scan decode, dequantize + IDCT, chroma upsample, RST
-    resync, and YCbCr round-trip simultaneously. JPEG is lossy, so
-    the fixture is MARGIN-ROBUST: pixels are gray (chroma constant →
-    4:2:0 exact) at levels spaced 32 apart with adjacent dHash-grid
-    cells forced to different levels; measured decode error ≤2 can
-    never flip a ≥32-margin comparison, and the +10-brightness PPM
-    copy (exact container) must land at hamming 0. Expected pair set
-    is again {(i, i+10^9, 0): i % 10 = 0}."""
+    subsampling and a DRI segment (restart_interval=2), so a match
+    drives DRI parsing, the Huffman scan decode, dequantize + IDCT,
+    chroma upsample, and YCbCr round-trip simultaneously. The 9x8
+    image is a single 16x16 MCU, so the scan carries no RSTn marker:
+    RST resync is covered by tests/test_jpeg.py, not here. JPEG is
+    lossy, so the fixture is MARGIN-ROBUST: pixels are gray (chroma
+    constant → 4:2:0 exact) at levels spaced 32 apart with adjacent
+    dHash-grid cells forced to different levels; measured decode
+    error ≤2 can never flip a ≥32-margin comparison, and the
+    +10-brightness PPM copy (exact container) must land at hamming 0.
+    Expected pair set is again {(i, i+10^9, 0): i % 10 = 0}."""
     import hashlib
 
     import pandas as pd
@@ -1091,19 +1093,6 @@ def _q_ivf_ann_probe_rowsonly(spark, sf):
     cent = train_centroids(emb, n_centroids=8, sample_rows=10_000)
     return ivf_topk(emb, cent, qvec, k=10, n_probe=2).withColumn(
         "rank", F.col("rank").cast("long")
-    )
-
-
-def _q_cuckoo_antijoin(spark, sf):
-    """O5 cuckoo variant — deletable seen filter; semantically the
-    exact anti-join (routing property-tested in tests/test_cuckoo.py),
-    so the oracle value-checks it directly."""
-    from webcrawler_spark.operators.cuckoo import anti_join_with_cuckoo
-
-    d = _docs(spark, sf).withColumn("url", _url_expr())
-    seen = d.filter(F.col("doc_id") % 3 == 0).select("url")
-    return anti_join_with_cuckoo(d.select("doc_id", "url"), seen, "url").select(
-        "doc_id", "url"
     )
 
 
@@ -2753,7 +2742,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fetch_join_filter": _q_fetch_join_filter,
         "priority_topk": _q_priority_topk,
         "bloom_antijoin": _q_bloom_antijoin,
-        "cuckoo_antijoin": _q_cuckoo_antijoin,
         "exact_dedup": _q_exact_dedup,
         "minhash_lsh_pairs": _q_minhash_lsh_pairs,
         "near_dup_pipeline": _q_near_dup_pipeline,
@@ -5385,11 +5373,6 @@ def oracle_sql() -> dict[str, str]:
             from e left join comp c on c.node = e.vec_id
         """,
         "bloom_antijoin": f"""
-            with u as (select doc_id, {_URL_SQL} as url from documents)
-            select doc_id, url from u
-            where url not in (select url from u where doc_id % 3 = 0)
-        """,
-        "cuckoo_antijoin": f"""
             with u as (select doc_id, {_URL_SQL} as url from documents)
             select doc_id, url from u
             where url not in (select url from u where doc_id % 3 = 0)

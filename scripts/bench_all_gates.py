@@ -3,7 +3,7 @@
 Runs the 240k-page bench crawl twice back-to-back on the same corpus
 and JVM shape: once with the reference-parity default config, once
 with EVERY opt-in feature enabled (trap filter, sitemap probing,
-URL blocklist + word weights, cuckoo seen-filter, salted selection,
+URL blocklist + word weights, Bloom seen-filter, salted selection,
 pagerank priority mode over the full host set, compaction + GC,
 bounded output files, metrics). The bench corpus contains no trap
 hosts, no sitemap files, and nothing matching the blocklist/word
@@ -84,7 +84,7 @@ def main() -> None:
             use_sitemaps=True,
             url_blocklist=["blocked.invalid"],
             url_word_weights={"casino": 0.6, "poker": 0.5},
-            seen_filter="cuckoo",
+            seen_filter="bloom",
             salt_n=2,
             priority_mode="pagerank",
             priority_refresh_rounds=4,

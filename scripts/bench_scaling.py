@@ -160,10 +160,10 @@ def child(cpus: int) -> None:
         round_window=float(os.environ.get("SPARK_GRAFT_BENCH_WINDOW", "10.0")),
         n_buckets=cpus,
         # round-3 verdict ask #7: run the J1 URL-seen stage with the
-        # sharded bloom/cuckoo pre-pass ON ("exact" anti-join is the
+        # sharded bloom pre-pass ON ("exact" anti-join is the
         # default) so BENCH.md can record the filter's cost at 10^5
         # scale (it exists to pay off at 10^10)
-        seen_filter=os.environ.get("SPARK_GRAFT_BENCH_SEEN_FILTER") or None,
+        seen_filter=os.environ.get("SPARK_GRAFT_BENCH_SEEN_FILTER") or "exact",
     )
     t0 = time.time()
     session = crawl(spark, pages, seeds, config=cfg)
@@ -450,7 +450,7 @@ def parent_seq(k_reps: int) -> None:
         # exceeds the quiet box), so each arm's best rep estimates its
         # quiet-box rate — the max-throughput analog of min-latency
         # over reps. Robust to weather without the probe's own
-        # co-load-depression bias (see scripts/calibrate_coload.py).
+        # co-load-depression bias.
         "scaling_efficiency_best": round((max(r8) / max(r2)) / 4, 3),
         "runs": runs,
         "config": {

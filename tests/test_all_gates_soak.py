@@ -1,6 +1,6 @@
 """ALL-gates-on soak (round-4 verdict ask #8): every opt-in engine
 feature enabled simultaneously on one durable crawl — trap filter,
-sitemap seeding, URL blocklist + word weights, cuckoo seen-filter,
+sitemap seeding, URL blocklist + word weights, Bloom seen-filter,
 salted FIFO selection, pagerank priority mode, compaction + GC,
 bounded output files, metrics — to shake out feature interactions the
 per-feature e2e tests cannot see (e.g. a trap-flagged host that is
@@ -118,8 +118,8 @@ def soak(spark, gate_web, tmp_path_factory):
         use_sitemaps=True,
         url_blocklist=["bad.example"],
         url_word_weights={"casino": 0.6, "poker": 0.5},
-        seen_filter="cuckoo",
-        # 0 puts the cuckoo pre-pass on every round (it is size-gated
+        seen_filter="bloom",
+        # 0 puts the Bloom pre-pass on every round (it is size-gated
         # on this cap) and the wave joins on the shuffle-hash fallback
         wave_broadcast_max_rows=0,
         salt_n=2,

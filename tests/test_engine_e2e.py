@@ -198,26 +198,7 @@ def test_bloom_path_equivalent(spark, pages):
         spark,
         pages,
         config=CrawlConfig(
-            max_rounds=40, use_bloom=True, wave_broadcast_max_rows=0
-        ),
-    )
-    eng.run(seeds_df(spark))
-    plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    plain.run(seeds_df(spark))
-    assert (
-        {(r["url"], r["fetched"]) for r in eng.seen().collect()}
-        == {(r["url"], r["fetched"]) for r in plain.seen().collect()}
-    )
-
-
-def test_cuckoo_path_equivalent(spark, pages):
-    """O5 cuckoo variant: same identical-crawl guarantee as the Bloom
-    pre-pass (tests/test_cuckoo.py pins the filter's own properties)."""
-    eng = CrawlEngine(
-        spark,
-        pages,
-        config=CrawlConfig(
-            max_rounds=40, seen_filter="cuckoo", wave_broadcast_max_rows=0
+            max_rounds=40, seen_filter="bloom", wave_broadcast_max_rows=0
         ),
     )
     eng.run(seeds_df(spark))
@@ -232,57 +213,29 @@ def test_cuckoo_path_equivalent(spark, pages):
 def test_seen_prefilter_runs_only_past_the_broadcast_gate(
     spark, pages, monkeypatch
 ):
-    """J1's probabilistic pre-pass is size-gated: while seen fits
+    """J1's Bloom pre-pass is size-gated: while seen fits
     wave_broadcast_max_rows the round runs the plain exact anti-join
-    and never calls a pre-pass; past the gate every round
-    calls the configured one."""
+    and never calls the pre-pass; past the gate every round calls it."""
     import webcrawler_spark.engine as engine
-    import webcrawler_spark.operators.cuckoo as cuckoo
 
     calls = []
+    real = engine.anti_join_with_bloom
 
-    def spy(name, fn):
-        def wrapped(*args, **kwargs):
-            calls.append(name)
-            return fn(*args, **kwargs)
+    def spy(*args, **kwargs):
+        calls.append("bloom")
+        return real(*args, **kwargs)
 
-        return wrapped
-
-    monkeypatch.setattr(
-        engine, "anti_join_with_bloom", spy("bloom", engine.anti_join_with_bloom)
-    )
-    monkeypatch.setattr(
-        cuckoo, "anti_join_with_cuckoo", spy("cuckoo", cuckoo.anti_join_with_cuckoo)
-    )
-    for f in ("bloom", "cuckoo"):
-        CrawlEngine(
-            spark, pages, config=CrawlConfig(max_rounds=2, seen_filter=f)
-        ).run(seeds_df(spark))
+    monkeypatch.setattr(engine, "anti_join_with_bloom", spy)
+    CrawlEngine(
+        spark, pages, config=CrawlConfig(max_rounds=2, seen_filter="bloom")
+    ).run(seeds_df(spark))
     assert calls == []
-    for f in ("bloom", "cuckoo"):
-        history = CrawlEngine(
-            spark,
-            pages,
-            config=CrawlConfig(
-                max_rounds=2, seen_filter=f, wave_broadcast_max_rows=0
-            ),
-        ).run(seeds_df(spark))
-        assert len(history) == 2
-        assert calls == [f, f]
-        calls.clear()
-
-
-def test_apply_in_pandas_politeness_equivalent(spark, pages):
-    """north_star fetch-executor shape: the applyInPandas grouped-map
-    politeness path produces the identical crawl (same seen set, same
-    attempt timestamps) as the native window path."""
-    native = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    native.run(seeds_df(spark))
-    cfg = CrawlConfig(max_rounds=40, fetch_executor="apply_in_pandas")
-    grouped = CrawlEngine(spark, pages, config=cfg)
-    grouped.run(seeds_df(spark))
-    a = {(r["url"], r["fetched"], round(r["attempt_ts"], 5))
-         for r in native.seen().collect()}
-    b = {(r["url"], r["fetched"], round(r["attempt_ts"], 5))
-         for r in grouped.seen().collect()}
-    assert a == b
+    history = CrawlEngine(
+        spark,
+        pages,
+        config=CrawlConfig(
+            max_rounds=2, seen_filter="bloom", wave_broadcast_max_rows=0
+        ),
+    ).run(seeds_df(spark))
+    assert len(history) == 2
+    assert calls == ["bloom", "bloom"]

@@ -738,6 +738,32 @@ def test_arrow_signature_tier_parity(spark):
     assert planted <= strict
 
 
+def test_verify_tiers_round_halfway_jaccard_alike(spark):
+    """At a binary-exact halfway Jaccard (65/128 = 0.5078125) the Arrow
+    verify tier rounds HALF_UP like the exact tier's F.round."""
+    from webcrawler_spark.operators.dedup import near_duplicate_pairs
+
+    # 99 and 98 distinct words sharing a 67-word prefix: 97 and 96
+    # 3-word shingles, 65 shared, union 128
+    shared = [f"s{i}" for i in range(67)]
+    a = shared + [f"a{i}" for i in range(32)]
+    b = shared + [f"b{i}" for i in range(31)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(a)), (2, " ".join(b))], "doc_id long, text string"
+    )
+    got = {
+        tier: [
+            (r["a"], r["b"], r["jaccard"])
+            for r in near_duplicate_pairs(
+                docs, bands=32, threshold=0.5, verify_tier=tier
+            ).collect()
+        ]
+        for tier in ("exact", "arrow")
+    }
+    assert got["exact"] == [(1, 2, 0.507813)]
+    assert got["arrow"] == got["exact"]
+
+
 def test_lsh_rows_per_band_subset_law(spark):
     """Multi-row bands (the scale tier) emit a SUBSET of the 1-row
     tier's candidates — collision needs every row-minhash to agree —

@@ -129,12 +129,22 @@ def test_unknown_mode_raises():
     [
         ({"priority_mode": "pagerank"}, "hosts_per_round"),
         ({"seen_filter": "blom"}, "seen_filter"),
-        ({"fetch_executor": "pandas"}, "fetch_executor"),
+        ({"seen_filter": "cuckoo"}, "seen_filter"),
     ],
 )
 def test_bad_config_fails_at_construction(kwargs, match):
     with pytest.raises(ValueError, match=match):
         CrawlConfig(**kwargs)
+
+
+@pytest.mark.parametrize("flags, want", [([], "exact"), (["--bloom"], "bloom")])
+def test_cli_bloom_flag_selects_seen_filter(flags, want):
+    from webcrawler_spark.main import build_parser, config_from_args
+
+    args = build_parser().parse_args(
+        ["--pages", "pages", "--catalog", "cat"] + flags
+    )
+    assert config_from_args(args).seen_filter == want
 
 
 def test_recrawl_rank_counts_each_url_once(spark, rank_web):

@@ -15,11 +15,12 @@ Scheduling semantics implemented (citations → /root/reference/):
 * F1-F8 gates, J1-J3 joins, A1-A5 aggregates             SURVEY.md §2
 * seen = every URL ever popped (attempted), not fetched  Worker.py:202
 
-Virtual clock: all politeness is computed in *virtual seconds* with
-native window arithmetic (no sleeps, no wall clock), which makes runs
-deterministic and lets the offline bench crank through simulated hours
-in wall-clock seconds. A live deployment flips ``live_politeness`` to
-sleep inside the applyInPandas fetch executor instead (same law).
+Virtual clock: all politeness is computed in *virtual seconds* (no
+sleeps, no wall clock), which makes runs deterministic and lets the
+offline bench crank through simulated hours in wall-clock seconds.
+Offline rounds assign attempt timestamps with native window arithmetic;
+a round with a live ``transport`` assigns them inside the per-host
+applyInPandas fetch executor instead (same law, identical timestamps).
 
 Determinism contract (§5.3): with ``sequential_parity_mode()`` config
 (one host, one URL per round) the engine reproduces the reference
@@ -39,8 +40,8 @@ Scale design (10^10 URLs, 1000 executors):
   fetched rows* — the reference's HEAD-before-GET two-phase fetch
   becomes column pruning (O2).
 * the seen anti-join takes the partitioned-Bloom pre-pass (O5) when
-  ``use_bloom`` and seen outgrows ``wave_broadcast_max_rows``; mega-host
-  skew is broken by two-phase salted FIFO selection (O9) when
+  ``seen_filter="bloom"`` and seen outgrows ``wave_broadcast_max_rows``;
+  mega-host skew is broken by two-phase salted FIFO selection (O9) when
   ``salt_n > 1``.
 """
 
@@ -103,14 +104,12 @@ class CrawlConfig:
     max_urls_per_host_per_round: int = 50
     round_window: float = 3.0            # virtual seconds per round (W4 budget)
     n_buckets: int = 8                   # host-hash bucket count (O12)
-    use_bloom: bool = False              # O5 seen pre-filter
-    # O5 variant selector: None defers to use_bloom; "exact" | "bloom" |
-    # "cuckoo" pick the J1 seen anti-join (cuckoo supports deletion —
-    # operators/cuckoo.py — for revisit policies); both pre-passes are
-    # routing accelerators over the same exact anti-join semantics, and
-    # they run only once seen holds more than wave_broadcast_max_rows
-    # rows — below that J1 is the plain exact anti-join.
-    seen_filter: Optional[str] = None
+    # J1 seen anti-join: "exact" | "bloom". The Bloom pre-pass
+    # (operators/bloom.py) is a routing accelerator over the same exact
+    # anti-join semantics, and it runs only once seen holds more than
+    # wave_broadcast_max_rows rows — below that J1 is the plain exact
+    # anti-join either way.
+    seen_filter: str = "exact"
     salt_n: int = 1                      # O9 two-phase FIFO selection fan
     # trap filtering (opt-in; default OFF preserves reference-ordering
     # parity): drop hosts whose fetched content is mostly duplicate —
@@ -168,19 +167,14 @@ class CrawlConfig:
     priority_rank_iters: int = 5
     collect_metrics: bool = True         # S7 per-round metrics table
     agent: str = "*"                     # Host.py:9
-    # W4 executor: "native" = window-arithmetic virtual clock (codegen,
-    # default); "apply_in_pandas" = grouped-map per-host executor — the
-    # shape a LIVE crawler needs, where the group function can actually
-    # time.sleep between fetches (live_politeness) and call out to the
-    # network. Both produce identical timestamps (tested).
-    fetch_executor: str = "native"
-    live_politeness: bool = False        # real sleeps inside the group fn
     # LIVE transport plug (sources/transport.py): an object exposing
     # head(url) / get(url) per the reference's access contract
     # (WebAccesser.py:35-100). When set, the round's HEAD probe (S3)
     # and GET fetch (S4) happen INSIDE the per-host applyInPandas
     # executor through this object instead of the offline corpus
-    # joins; FakeTransport(corpus) reproduces the offline crawl
+    # joins, and the same executor assigns the W4 attempt timestamps
+    # (offline rounds use native window arithmetic; the timestamps are
+    # identical). FakeTransport(corpus) reproduces the offline crawl
     # byte-for-byte (tests/test_live_fetch.py), Urllib3Transport is
     # the real-network client. Must be picklable (ships to executors).
     transport: Optional[Any] = None
@@ -203,7 +197,7 @@ class CrawlConfig:
     # round wave is hosts × max_urls_per_host_per_round and is unbounded
     # at 10^10-URL scale; past this cap a broadcast would exceed driver/
     # executor memory and fail the round. The same value is the seen
-    # size past which J1 runs the use_bloom/seen_filter pre-pass (below
+    # size past which J1 runs the seen_filter="bloom" pre-pass (below
     # it J1 is the plain exact anti-join). 0 forces the shuffle-hash
     # fallback everywhere and turns the pre-pass on every round (used
     # by the equivalence tests).
@@ -213,8 +207,7 @@ class CrawlConfig:
         # fail at construction, not rounds into a crawl
         for name, allowed in (
             ("priority_mode", ("fifo", "pagerank", "opic", "recrawl")),
-            ("seen_filter", (None, "exact", "bloom", "cuckoo")),
-            ("fetch_executor", ("native", "apply_in_pandas")),
+            ("seen_filter", ("exact", "bloom")),
         ):
             if getattr(self, name) not in allowed:
                 raise ValueError(
@@ -355,19 +348,6 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     # setup / resume
     # ------------------------------------------------------------------
-    _TRACE = bool(__import__("os").environ.get("WCSPARK_TRACE"))
-
-    def _t(self, label: str, t0: float) -> float:
-        import time as _time
-
-        now = _time.time()
-        if self._TRACE:
-            print(
-                f"    [trace] {label}: {now - t0:.2f}s @{now % 100000:.2f}",
-                flush=True,
-            )
-        return now
-
     def _bucket(self, host: F.Column) -> F.Column:
         return F.pmod(F.xxhash64(host), F.lit(self.cfg.n_buckets)).cast("int")
 
@@ -383,52 +363,13 @@ class CrawlEngine:
             return big.join(small.hint("shuffle_hash"), on, how)
         return big.join(F.broadcast(small), on, how)
 
-    def _politeness_apply_in_pandas(self, sel: DataFrame, t_round: float) -> DataFrame:
-        """W4 as a grouped-map executor (north_star shape): one pandas
-        group per host runs its FIFO serially, assigning attempt
-        timestamps under the politeness law — and, in live mode,
-        actually sleeping out the delays (Worker.py:209-216). The
-        virtual-time math is identical to the native window path.
-
-        Skew note (O9): a mega-host group is bounded by the per-round
-        budget (max_urls_per_host_per_round), so no group exceeds
-        budget rows regardless of frontier skew.
-        """
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        out_schema = StructType(
-            list(sel.schema.fields) + [StructField("attempt_ts", DoubleType())]
-        )
-        live = self.cfg.live_politeness
-
-        def run_host(pdf: pd.DataFrame) -> pd.DataFrame:
-            import time as _time
-
-            pdf = pdf.sort_values("rn_host").reset_index(drop=True)
-            start = max(t_round, float(pdf["priority"].iloc[0]))
-            delay = float(pdf["delay"].iloc[0])
-            ts, consumed = [], 0
-            for sa in pdf["should_access"]:
-                t = start + consumed * delay
-                ts.append(t)
-                if bool(sa):
-                    if live:
-                        wait = t - _time.time()
-                        if wait > 0:
-                            _time.sleep(min(wait, 30.0))
-                    consumed += 1
-            pdf["attempt_ts"] = ts
-            return pdf
-
-        return sel.groupBy("host").applyInPandas(run_host, out_schema)
-
     def _fetch_apply_in_pandas_live(
         self, sel: DataFrame, t_round: float
     ) -> DataFrame:
         """S3/W4/S4 fused as a LIVE grouped-map executor (the
         north_star plug point): each per-host pandas group walks its
-        FIFO and, per row, performs the HEAD probe, the politeness
-        wait, and the GET through ``cfg.transport`` (the reference's
+        FIFO and, per row, performs the HEAD probe, assigns the
+        politeness timestamp, and runs the GET through ``cfg.transport`` (the reference's
         access contract, WebAccesser.py:35-100) instead of the offline
         corpus joins.
 
@@ -438,8 +379,6 @@ class CrawlEngine:
         WebAccesser.py:92-96), and the identical virtual-clock
         politeness law — so a FakeTransport over the same corpus
         yields a byte-identical crawl (tests/test_live_fetch.py).
-        ``live_politeness=True`` additionally sleeps the delays out in
-        wall time (Worker.py:209-216).
 
         Skew note (O9): one pandas group per host, bounded by the
         per-round budget, so no group exceeds budget rows; hosts fan
@@ -468,11 +407,8 @@ class CrawlEngine:
             ]
         )
         transport = self.cfg.transport
-        live = self.cfg.live_politeness
 
         def run_host(pdf: pd.DataFrame) -> pd.DataFrame:
-            import time as _time
-
             pdf = pdf.sort_values("rn_host").reset_index(drop=True)
             start = max(t_round, float(pdf["priority"].iloc[0]))
             delay = float(pdf["delay"].iloc[0])
@@ -497,10 +433,6 @@ class CrawlEngine:
                 body = None
                 fetched = False
                 if should:
-                    if live:
-                        wait = t - _time.time()
-                        if wait > 0:
-                            _time.sleep(min(wait, 30.0))
                     consumed += 1
                     if 200 <= status < 300:                      # F4
                         g = transport.get(row.url)               # S4
@@ -918,9 +850,6 @@ class CrawlEngine:
     # one round (SURVEY.md §3.2 rebuild pipeline)
     # ------------------------------------------------------------------
     def run_round(self) -> dict:
-        import time as _time
-
-        _tt = _time.time()
         cfg, st = self.cfg, self.state
         frontier = self.cat.read("frontier")
         host_state = self.cat.read("host_state")
@@ -1055,14 +984,12 @@ class CrawlEngine:
         # left-outer semantics are recovered with a small-small join.
         # The corpus never shuffles — at 10^10 pages a per-round
         # sort-merge of the pages table would dwarf everything else.
-        _tt = self._t('pre-cand', _tt)
         # the wave size drives the O13 gates; it rides the checkpoint
         # materialization as an Observation instead of a count() job
         # over the cached blocks (one fewer job barrier per round)
         cand_obs = Observation()
         cand = checkpoint(cand.observe(cand_obs, F.count(F.lit(1)).alias("n")))
         n_cand = int(cand_obs.get["n"])
-        _tt = self._t('cand ckpt', _tt)
         # F2 inputs: robots bodies for THIS WAVE's hosts only — joined
         # from the append-only host_robots table, never broadcast
         # wholesale (the scheduling broadcast above is body-free)
@@ -1109,11 +1036,8 @@ class CrawlEngine:
             )
 
         # ---- W4 politeness: per-host attempt timestamps ----------------
-        if cfg.transport is not None:
-            pass  # attempt_ts already assigned inside the live executor
-        elif cfg.fetch_executor == "apply_in_pandas":
-            sel = self._politeness_apply_in_pandas(sel, t_round)
-        else:
+        # (a live round assigned attempt_ts inside its executor)
+        if cfg.transport is None:
             # native window arithmetic (virtual clock, codegen path)
             start_h = F.greatest(F.lit(t_round), F.col("priority"))
             w_seq = (
@@ -1149,10 +1073,8 @@ class CrawlEngine:
 
         sel_obs = _Obs()
         sel = checkpoint(sel.observe(sel_obs, *_SCALAR_AGGS()))  # reused ≥3×
-        _tt = self._t('sel ckpt', _tt)
 
         scal = sel_obs.get
-        _tt = self._t('scalars', _tt)
         n_fetched_round = scal["n_fet"] or 0
 
         # ---- A1 budget truncation (final-round exact landing) ----------
@@ -1295,7 +1217,6 @@ class CrawlEngine:
             host_state_written = True
         results = _join_jobs(*batch)
         fetched_rows, seen = results[0], results[1]
-        _tt = self._t('fetch+parse+write || seen append', _tt)
 
         if cfg.trap_filter:
             # per-host content-duplication state: one HLL register delta
@@ -1317,7 +1238,6 @@ class CrawlEngine:
                     F.count(F.lit(1)).cast("long").alias("n")
                 ),
             )
-            _tt = self._t('trap-state append', _tt)
 
         # ---- new links → frontier (P7/P8 → A5 → J1) --------------------
         # columnar delta read: text/title never leave the parquet files
@@ -1349,23 +1269,14 @@ class CrawlEngine:
         )
         # J1: never re-attempt (seen) and never double-queue (pending).
         # seen holds one row per attempt, so the driver knows its size.
-        # The probabilistic pre-pass (a filter build + a Python probe
+        # The Bloom pre-pass (a filter build + a Python probe
         # stage) only pays once seen outgrows the O13 broadcast cap;
         # below it J1 is the plain exact anti-join and Spark picks the
         # strategy (a small seen is auto-broadcast). The cap as the
         # crossover is a proxy: it has not been measured against
         # seen sizes near it.
         n_seen = st.total_attempted + int(scal["n_att"] or 0)
-        seen_filter = cfg.seen_filter or ("bloom" if cfg.use_bloom else "exact")
-        if n_seen <= cfg.wave_broadcast_max_rows:
-            seen_filter = "exact"
-        if seen_filter == "cuckoo":
-            from webcrawler_spark.operators.cuckoo import anti_join_with_cuckoo
-
-            new_links = anti_join_with_cuckoo(
-                links, seen, "url", expected_items=n_seen
-            )
-        elif seen_filter == "bloom":
+        if cfg.seen_filter == "bloom" and n_seen > cfg.wave_broadcast_max_rows:
             new_links = anti_join_with_bloom(
                 links, seen, "url", expected_items=n_seen
             )
@@ -1395,7 +1306,6 @@ class CrawlEngine:
             # parity mode reads new_links twice (revive scan + frontier
             # union) — checkpoint so the window/anti-join tree runs once
             new_links = checkpoint(new_links)
-            _tt = self._t('new_links ckpt', _tt)
         # scale mode: new_links feeds ONLY the frontier overwrite, so
         # the parquet write below is its one materialization — no extra
         # checkpoint job (every input leaf is already a parquet delta
@@ -1445,7 +1355,6 @@ class CrawlEngine:
                 )
                 .collect()  # revived hosts are few (idle + re-linked)
             )
-            _tt = self._t('revived collect', _tt)
         else:
             revived_rows = []
 
@@ -1507,7 +1416,6 @@ class CrawlEngine:
         _fo = front_obs.get
         st.frontier_rows = int(_fo["n"])
         st.pending_new_hosts = int(_fo["new_host_rows"] or 0)
-        _tt = self._t('host_state || frontier || metrics', _tt)
         # free this round's checkpoint caches (iterative loops leak
         # cached RDD blocks otherwise — OOM after ~50 rounds)
         for _df in (cand, sel, new_links):
@@ -1555,7 +1463,6 @@ class CrawlEngine:
             # after the commit so the compacted dirs are referenced by
             # a retained manifest row before anything is deleted
             self.cat.gc(cfg.gc_keep_rounds)
-        _tt = self._t('round tail (free/compact/commit)', _tt)
         return {
             "round": round_no,
             "attempted": int(n_attempted),
@@ -1567,12 +1474,8 @@ class CrawlEngine:
     def run(self, seeds: DataFrame | None = None, verbose: bool = False) -> list[dict]:
         """Full crawl: init (unless resuming) + rounds until quiescence
         (D4), budget (A1), or max_rounds."""
-        import time as _time
-
-        _t0 = _time.time()
         if seeds is not None:
             self.init_from_seeds(seeds)
-        _t0 = self._t('init_from_seeds', _t0)
         history = []
         while not self.state.done:
             if (

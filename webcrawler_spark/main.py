@@ -50,11 +50,23 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def config_from_args(args: argparse.Namespace):
+    """The crawl's CrawlConfig from parsed CLI arguments."""
+    from webcrawler_spark.engine import CrawlConfig
+
+    return CrawlConfig(
+        limit=args.limit,
+        max_rounds=args.max_rounds,
+        seen_filter="bloom" if args.bloom else "exact",
+        salt_n=args.salt,
+        records_per_file=args.records_per_file,
+    )
+
+
 def main(argv=None) -> int:
     from pyspark.sql import SparkSession, Window
     from pyspark.sql import functions as F
 
-    from webcrawler_spark.engine import CrawlConfig
     from webcrawler_spark.plans.crawl import crawl, resume_crawl
 
     args = build_parser().parse_args(argv)
@@ -64,13 +76,7 @@ def main(argv=None) -> int:
         SparkSession.builder.appName("webcrawler-spark")
     ).getOrCreate()
     pages = spark.read.parquet(args.pages)
-    cfg = CrawlConfig(
-        limit=args.limit,
-        max_rounds=args.max_rounds,
-        use_bloom=args.bloom,
-        salt_n=args.salt,
-        records_per_file=args.records_per_file,
-    )
+    cfg = config_from_args(args)
 
     t0 = time.time()
     if args.resume:

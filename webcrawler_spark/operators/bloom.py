@@ -12,6 +12,8 @@ never-seen URL, so the filter only routes rows:
     maybe-seen  → exact anti-join (false positives die there)
     surely-new  → bypass the join (Bloom has no false negatives)
 
+``maybe_seen=False`` therefore must imply *certainly never inserted*.
+
 Implementation is numpy end-to-end and fully distributed:
 
 * hashes: the two 64-bit hashes are NATIVE ``xxhash64`` columns
@@ -24,16 +26,21 @@ Implementation is numpy end-to-end and fully distributed:
   builds them distributed — one ``applyInPandas`` task per shard, the
   result staying a ``(shard, bitmap)`` DataFrame — so no single
   process ever holds the whole filter. At 10^10 URLs / 1% fpp the
-  monolithic filter would be ~12 GiB; 1024 shards are ~12 MiB each.
+  monolithic filter would be ~12 GiB (past Spark's 8 GiB broadcast
+  cap); 1024 shards are ~12 MiB each.
 * probe, two size-gated modes (``anti_join_with_bloom``):
   - **broadcast** (total bytes ≤ ``broadcast_cap_bytes``): the shard
     dict ships as one Spark broadcast; a pandas UDF tests k bits per
     URL with vectorized numpy over the native hash columns. Right for
-    local tests and early crawl rounds.
-  - **shard_join** (the 100 TB path): candidates shuffle once on the
-    shard key and meet their shard's bitmap in a cogrouped
-    ``applyInPandas`` (operators/seenfilter.py) — no whole-filter
-    broadcast, no driver residency, no bitmap row-duplication.
+    local tests and early crawl rounds (same O13 size-gate pattern as
+    the engine's wave join).
+  - **shard_join** (the 100 TB path, ``tag_maybe_seen_sharded``):
+    candidates compute the shard key natively and shuffle ONCE on it;
+    the n_shards bitmap rows shuffle to the same partitions; each
+    cogrouped ``applyInPandas`` task sees one shard's candidates plus
+    that shard's bitmap. No executor or the driver materializes the
+    whole filter, and the bitmap is never row-duplicated the way a
+    plain equi-join against the candidates would duplicate it.
   Both modes are tag-identical (tests/test_bloom.py parity test).
 
 ``build_bloom`` (single monolithic bitmap via per-partition partials +
@@ -49,13 +56,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from webcrawler_spark.operators.seenfilter import (
-    DEFAULT_BROADCAST_CAP,
-    as_u64,
-    route_with_exact_join,
-    tag_maybe_seen_sharded,
-)
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 K_HASHES = 4
 
@@ -64,6 +65,14 @@ K_HASHES = 4
 _SALT = "#wcspark-bloom-h2"
 
 DEFAULT_SHARDS = 8
+
+# Past this total filter size, ship shards by shuffle-on-shard-key
+# instead of broadcasting the whole filter. 64 MiB is far below Spark's
+# broadcast ceiling but already past the point where re-broadcasting
+# every round beats one candidate shuffle.
+DEFAULT_BROADCAST_CAP = 64 << 20
+
+_H1, _H2, _SHARD = "__sf_h1", "__sf_h2", "__sf_shard"
 
 
 def hash_cols(col: str | Column) -> tuple[Column, Column]:
@@ -84,7 +93,7 @@ def shard_col(col: str | Column, n_shards: int) -> Column:
 
 def _as_u64(s: pd.Series) -> np.ndarray:
     """Arrow int64 hash column -> uint64 bit pattern."""
-    return as_u64(s)
+    return s.to_numpy(dtype=np.int64).view(np.uint64)
 
 
 def _bit_positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
@@ -198,14 +207,45 @@ def with_maybe_seen(
     return df.withColumn("maybe_seen", probe(c1, c2, shard_col(col, n_shards)))
 
 
-def _probe_shard_pdf(bits_per_shard: int):
-    """Shard-join-mode membership test for seenfilter.tag_maybe_seen_sharded."""
+def tag_maybe_seen_sharded(
+    candidates: DataFrame,
+    col: str,
+    shards: DataFrame,
+    bits_per_shard: int,
+    n_shards: int,
+) -> DataFrame:
+    """Shard-join-mode tag: add boolean ``maybe_seen`` via a cogrouped
+    join of the candidates with the ``(shard, bitmap)`` DataFrame on the
+    shard key. A shard with no bitmap row (no key ever inserted there)
+    tags every candidate surely-new."""
+    cand_cols = list(candidates.columns)
+    out_schema = StructType(
+        [candidates.schema[c] for c in cand_cols]
+        + [StructField("maybe_seen", BooleanType(), False)]
+    )
+    c1, c2 = hash_cols(col)
+    tagged_in = (
+        candidates.withColumn(_H1, c1)
+        .withColumn(_H2, c2)
+        .withColumn(_SHARD, shard_col(col, n_shards))
+    )
 
-    def probe(shard_pdf: pd.DataFrame, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        bitmap = np.frombuffer(shard_pdf["bitmap"].iloc[0], dtype=np.uint8)
-        return _test_bits(bitmap, h1, h2, bits_per_shard)
+    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        out = left[cand_cols].copy()
+        if len(left) == 0 or len(right) == 0:
+            out["maybe_seen"] = np.zeros(len(left), dtype=bool)
+        else:
+            bitmap = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
+            out["maybe_seen"] = _test_bits(
+                bitmap, _as_u64(left[_H1]), _as_u64(left[_H2]), bits_per_shard
+            )
+        return out
 
-    return probe
+    return (
+        tagged_in.groupBy(_SHARD)
+        .cogroup(shards.groupBy("shard"))
+        .applyInPandas(fn, out_schema)
+    )
 
 
 def anti_join_with_bloom(
@@ -242,14 +282,10 @@ def anti_join_with_bloom(
         bc = spark.sparkContext.broadcast(bitmaps)
         tagged = with_maybe_seen(candidates, col, bc, bits_per_shard, n_shards)
     else:
-        c1, c2 = hash_cols(col)
         tagged = tag_maybe_seen_sharded(
-            candidates,
-            c1,
-            c2,
-            shard_col(col, n_shards),
-            shards,
-            "shard",
-            _probe_shard_pdf(bits_per_shard),
+            candidates, col, shards, bits_per_shard, n_shards
         )
-    return route_with_exact_join(tagged, seen, col)
+    # the routing contract: false positives die in the exact join
+    surely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    return surely_new.unionByName(maybe.join(seen.select(col), col, "left_anti"))

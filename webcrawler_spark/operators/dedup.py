@@ -21,6 +21,8 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -499,7 +501,9 @@ def _jaccard_verify_arrow(
                 union = len(sa | sb)
                 if union == 0:
                     continue
-                j = round(len(sa & sb) / union, 6)
+                # HALF_UP like the exact tier's F.round (Python's
+                # round() is half-even: 65/128 would give 0.507812)
+                j = math.floor(len(sa & sb) / union * 1e6 + 0.5) / 1e6
                 if j >= threshold:
                     out_a.append(a)
                     out_b.append(b)
