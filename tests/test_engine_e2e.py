@@ -30,9 +30,35 @@ def simres(spark, pages):
     return sim.run(SEEDS)
 
 
+# Spark jobs one steady-state scale-mode round of this crawl submits
+# (rounds 2-4: no host left to admit), as measured; a change that cuts
+# round jobs lowers it
+STEADY_ROUND_JOBS = 26
+
+
+class _JobCountingEngine(CrawlEngine):
+    """Records (pending_new_hosts at the round's start, round result,
+    Spark jobs the round submitted). Jobs are counted by job-id
+    difference: the engine's concurrent table writes run on pool
+    threads, which do not inherit a job group."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.round_jobs: list = []
+
+    def run_round(self) -> dict:
+        tracker = self.spark.sparkContext.statusTracker()
+        pending = self.state.pending_new_hosts
+        before = set(tracker.getJobIdsForGroup(None))
+        out = super().run_round()
+        n = len(set(tracker.getJobIdsForGroup(None)) - before)
+        self.round_jobs.append((pending, out, n))
+        return out
+
+
 @pytest.fixture(scope="module")
 def crawled(spark, pages):
-    eng = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
+    eng = _JobCountingEngine(spark, pages, config=CrawlConfig(max_rounds=40))
     eng.run(seeds_df(spark))
     return eng
 
@@ -127,6 +153,17 @@ def test_debug_records_format(crawled):
         assert set(rec) <= {"URL", "Title", "Text", "Timestamp"}
         assert rec["URL"].startswith("https://")
         assert len(rec["Text"].split()) <= 20  # P10 first-20-words
+
+
+def test_steady_state_round_job_budget(crawled):
+    """A scale-mode round with no host to admit submits at most
+    STEADY_ROUND_JOBS Spark jobs (a cut lowers the pin)."""
+    steady = [
+        n for pending, out, n in crawled.round_jobs
+        if pending == 0 and "stopped" not in out
+    ]
+    assert steady, crawled.round_jobs
+    assert max(steady) <= STEADY_ROUND_JOBS, crawled.round_jobs
 
 
 def test_budget_limit_exact(spark, pages, simres):

@@ -68,6 +68,19 @@ def test_restart_markers_resync():
     assert np.array_equal(plain["pixels"], rst["pixels"])
 
 
+def test_fill_bytes_and_lengthless_markers_between_segments():
+    # T.81 B.1.1.2: a marker may be preceded by any run of 0xFF fill
+    # bytes, and TEM (0xFF01) and RSTn carry no length field
+    raw = _payload(b"f", 17 * 11 * 3)
+    jp = encode_jpeg(raw, width=17, channels=3)
+    i = jp.find(b"\xff\xc0")
+    padded = jp[:i] + b"\xff\x01\xff\xd3\xff\xff" + jp[i:]
+    assert padded[i + 4 : i + 8] == b"\xff\xff\xff\xc0"
+    assert np.array_equal(
+        decode_jpeg(padded)["pixels"], decode_jpeg(jp)["pixels"]
+    )
+
+
 def test_lossy_qtable_still_decodes():
     raw = _payload(b"q", 24 * 24 * 3)
     img = decode_jpeg(encode_jpeg(raw, width=24, channels=3, qtable=16))

@@ -130,6 +130,8 @@ def test_unknown_mode_raises():
         ({"priority_mode": "pagerank"}, "hosts_per_round"),
         ({"seen_filter": "blom"}, "seen_filter"),
         ({"seen_filter": "cuckoo"}, "seen_filter"),
+        ({"hosts_per_round": 0}, "hosts_per_round"),
+        ({"max_urls_per_host_per_round": 0}, "max_urls_per_host_per_round"),
     ],
 )
 def test_bad_config_fails_at_construction(kwargs, match):

@@ -125,3 +125,35 @@ def test_honest_host_never_flagged(spark, trap_web):
     n = _per_host_fetched(eng)
     assert n["https://good-a.example"] == 30
     assert n["https://good-b.example"] == 30
+
+
+def test_trap_cut_frontier_stops_without_an_empty_round(spark):
+    """A frontier holding only a flagged host's rows ends the crawl at
+    the round whose trap cut empties it: no full round that attempts
+    nothing before the quiescence stop."""
+    urls = [f"https://trap.example/cal?day={i}" for i in range(200)]
+    pages = spark.createDataFrame(
+        [_page(u, "the same calendar page forever") for u in urls],
+        "url string, html binary, status int, content_type string",
+    ).localCheckpoint()
+    seeds = spark.createDataFrame(
+        [(u, i) for i, u in enumerate(urls)], "url string, seed_order long"
+    )
+    cfg = CrawlConfig(
+        max_rounds=12,
+        max_urls_per_host_per_round=10,
+        round_window=1000.0,
+        collect_metrics=False,
+        trap_filter=True,
+        trap_min_urls=15,
+    )
+    eng = CrawlEngine(spark, pages, config=cfg)
+    history = eng.run(seeds)
+    assert [(m["attempted"], m["fetched"]) for m in history[:2]] == [
+        (10, 10),
+        (10, 10),
+    ]
+    assert history[2:] == [
+        {"round": 2, "attempted": 0, "fetched": 0, "stopped": "empty"}
+    ]
+    assert eng.state.done and eng.state.round == 2

@@ -1,4 +1,4 @@
-"""Batch-iterative crawl engine: one Spark job per round (SURVEY.md §3.2).
+"""Batch-iterative crawl engine: a driver loop of BSP rounds over Spark (SURVEY.md §3.2).
 
 This is the PySpark-native replacement for the reference's 80 threads +
 locks + mailboxes (Crawler.py / Worker.py / WorkersPipeline.py): a
@@ -14,6 +14,26 @@ Scheduling semantics implemented (citations → /root/reference/):
 * W4 politeness   — delay law 0.1/verbatim/3.0 clamp     Host.py:95-114
 * F1-F8 gates, J1-J3 joins, A1-A5 aggregates             SURVEY.md §2
 * seen = every URL ever popped (attempted), not fetched  Worker.py:202
+
+Round phases: ``CrawlEngine.run_round`` is the reference worker loop
+(pop the host heap, wait out politeness, HEAD/GET, parse, hand out
+links; Worker.py:32-306) as six methods, each deciding the live-fetch
+and parity/scale forks for itself:
+
+1. ``_admit``          S2 robots admission of new hosts  Worker.py:119-147
+2. ``_schedule``       J2, W3 FIFO rank, W4 budget, W1   Host.py:59-69,
+                       host rank → ``cand`` checkpoint   Worker.py:49,227-228
+3. ``_gate_fetch``     F1-F5 gates, S3 HEAD + J3 (or the WebAccesser.py:35-100,
+                       live transport executor), W4      Host.py:95-114
+                       attempt_ts → ``sel`` checkpoint;
+   ``_truncate_to_budget`` A1 final-round truncation     WorkersPipeline.py:271-272
+4. ``_write_fetched``  S4 GET + parse → pages_fetched    Worker.py:202
+                       (S5), seen append, trap deltas
+5. ``_exchange_links`` P7/P8 links, A5, J1, W3 seq,      Parser.py:56-66,
+                       revive (parity mode)              Worker.py:127-134
+6. ``_commit``         driver scalars, frontier (+ due   WorkersPipeline.py:24-26
+                       host_state/metrics) writes,
+                       compaction, manifest row, GC
 
 Virtual clock: all politeness is computed in *virtual seconds* (no
 sleeps, no wall clock), which makes runs deterministic and lets the
@@ -47,12 +67,12 @@ Scale design (10^10 URLs, 1000 executors):
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+import gc
+from dataclasses import dataclass
 from typing import Any, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from webcrawler_spark.functions.parse import parse_page_udf
@@ -94,6 +114,23 @@ def _join_jobs(*thunks):
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futures = [ex.submit(t) for t in thunks]
         return [f.result() for f in futures]
+
+
+def _scalar_aggs() -> tuple:
+    """The round scalars (the reference's locked counters,
+    WorkersPipeline.py:24-26), observed on the ``sel`` checkpoint's own
+    materialization: no dedicated job."""
+    return (
+        F.count(F.lit(1)).alias("n_att"),
+        F.sum(F.col("fetched").cast("int")).alias("n_fet"),
+        F.min("priority").alias("min_popped"),
+        F.max(
+            F.when(F.col("should_access"), F.col("attempt_ts") + F.col("delay"))
+        ).alias("max_requeue"),
+        F.max(F.when(F.col("should_access"), F.col("attempt_ts"))).alias(
+            "max_fetch_ts"
+        ),
+    )
 
 
 @dataclass
@@ -214,6 +251,9 @@ class CrawlConfig:
                     f"unknown {name} {getattr(self, name)!r}"
                     f" (expected one of {allowed})"
                 )
+        for name in ("hosts_per_round", "max_urls_per_host_per_round"):
+            if getattr(self, name) is not None and getattr(self, name) < 1:
+                raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
         if self.priority_mode != "fifo" and self.hosts_per_round is None:
             raise ValueError(
                 f"priority_mode {self.priority_mode!r} orders the"
@@ -474,8 +514,6 @@ class CrawlEngine:
         )
         if self.cfg.use_sitemaps:
             fr = fr.unionByName(self._sitemap_seeds(fr))
-        from pyspark.sql import Observation
-
         # the seed count rides the frontier write: round 0's D4 check
         # then needs no isEmpty() job
         fr_obs = Observation()
@@ -847,96 +885,123 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
-    # one round (SURVEY.md §3.2 rebuild pipeline)
+    # one round (SURVEY.md §3.2 rebuild pipeline), as six phases
     # ------------------------------------------------------------------
     def run_round(self) -> dict:
+        """One round: admit → schedule → gate + fetch → fetch+parse write
+        → link exchange → commit (module docstring). Its two checkpoints,
+        ``cand`` and ``sel``, are taken here, each with an Observation."""
         cfg, st = self.cfg, self.state
-        frontier = self.cat.read("frontier")
-        host_state = self.cat.read("host_state")
-        seen = self.cat.read("seen")
-
-        if cfg.trap_filter:
-            # drop trap hosts' pending URLs at the read: everything
-            # downstream (scheduling, remaining_frontier, the round-end
-            # overwrite) then excludes them permanently, so quiescence
-            # still drains the frontier
-            traps = self._trap_hosts()
-            if traps is not None:
-                frontier = self._wave_join(
-                    frontier, traps, "host", "left_anti", st.total_hosts
-                )
-
-        frontier_empty = (
-            st.frontier_rows == 0
-            if st.frontier_rows is not None
-            else frontier.isEmpty()
-        )
-        if frontier_empty:                                      # D4 quiescence
-            st.done = True
-            self.cat.commit_round(st.round, st.to_json())
-            return {"round": st.round, "attempted": 0, "fetched": 0, "stopped": "empty"}
+        frontier = self._pending_frontier()
+        if (st.frontier_rows == 0 if st.frontier_rows is not None
+                else frontier.isEmpty()):
+            return self._stop("empty")                              # D4
         if cfg.limit is not None and st.total_fetched >= cfg.limit:
-            st.done = True
-            self.cat.commit_round(st.round, st.to_json())
-            return {"round": st.round, "attempted": 0, "fetched": 0, "stopped": "budget"}
-
-        # ---- S2: admit new hosts ---------------------------------------
-        # the admission record (robots verdict + body + initial priority)
-        # is written ONCE as this round's host_robots delta; the slim
-        # scheduling row is derived from the written delta, so the
-        # robots-parse UDF runs exactly once per new host per crawl and
-        # bodies never enter the broadcast scheduling table.
-        from pyspark.sql import Observation
-
-        if st.pending_new_hosts == 0:
-            # the committed frontier was observed to contain zero rows
-            # with unadmitted hosts — admission is provably a no-op;
-            # skip its anti-join + robots-parse UDF + delta write
-            # (steady-state rounds discover no new hosts, so this
-            # removes one fixed-cost job batch per round)
-            pass
-        else:
-            new_hosts = self._robots_for_new_hosts(frontier, host_state)
-            hosts_obs = Observation()
-            new_delta = self.cat.append_delta(
-                "host_robots",
-                new_hosts.observe(hosts_obs, F.count(F.lit(1)).alias("n")),
-            )
-            # observed on the delta write itself — no separate count job
-            st.total_hosts += int(hosts_obs.get["n"])
-            host_state = host_state.unionByName(
-                new_delta.select("host", "delay", "priority").withColumn(
-                    "ever_popped", F.lit(False)
-                )
-            )
-
-        # ---- J2 + W1/W3 scheduling -------------------------------------
-        # note: no global clock jump here — a skipped pop must not
-        # advance the clock (Worker.py:209-216 waits only on fetches);
-        # the per-row greatest(clock, priority) below is the wait.
+            return self._stop("budget")                             # A1
+        host_state = self._admit(frontier)
+        # no global clock jump: a skipped pop must not advance the clock
+        # (Worker.py:209-216 waits only on fetches); W4's per-row
+        # greatest(clock, priority) is the wait
         t_round = st.clock
+        cand_obs, sel_obs = Observation(), Observation()
+        cand = checkpoint(self._schedule(frontier, host_state).observe(
+            cand_obs, F.count(F.lit(1)).alias("n")))
+        n_cand = int(cand_obs.get["n"])
+        if n_cand == 0:
+            # every frontier host is admitted before J2 and keeps ≥ 1 row
+            # under the W4 budget: the trap cut emptied the frontier
+            free(cand)
+            return self._stop("empty")                              # D4
+        sel = checkpoint(self._gate_fetch(cand, n_cand, t_round).observe(
+            sel_obs, *_scalar_aggs()))
+        sel, scal, truncated = self._truncate_to_budget(sel, sel_obs.get)
+        n_att, n_fet = int(scal["n_att"] or 0), int(scal["n_fet"] or 0)
+        # parity mode re-schedules revived hosts, so host_state waits for
+        # this round's new links; scale mode writes it (and metrics)
+        # alongside the page write
+        revive = cfg.hosts_per_round is not None
+        fetched_rows, seen = self._write_fetched(
+            sel, n_fet,
+            [] if revive else self._host_writes(sel, n_att, host_state, []))
+        new_frontier, new_links, revived = self._exchange_links(
+            frontier, host_state, sel, n_att, fetched_rows, seen, revive)
+        round_no = self._commit(
+            new_frontier,
+            self._host_writes(sel, n_att, host_state, revived) if revive else [],
+            scal, revived, (cand, sel, new_links))
+        return {"round": round_no, "attempted": n_att, "fetched": n_fet,
+                "truncated": truncated}
+
+    def _stop(self, reason: str) -> dict:
+        """End the crawl without attempting anything: D4 quiescence
+        (``"empty"``) or A1 budget (``"budget"``)."""
+        st = self.state
+        st.done = True
+        self.cat.commit_round(st.round, st.to_json())
+        return {"round": st.round, "attempted": 0, "fetched": 0,
+                "stopped": reason}
+
+    def _pending_frontier(self) -> DataFrame:
+        """The committed frontier. With ``trap_filter`` on, trap hosts'
+        rows are dropped at this read: scheduling, the remaining
+        frontier and the round-end overwrite then all exclude them, so
+        they leave the frontier for good."""
+        frontier = self.cat.read("frontier")
+        traps = self._trap_hosts() if self.cfg.trap_filter else None
+        if traps is None:
+            return frontier
+        return self._wave_join(
+            frontier, traps, "host", "left_anti", self.state.total_hosts
+        )
+
+    def _admit(self, frontier: DataFrame) -> DataFrame:
+        """S2: admit the frontier's new hosts; returns the scheduling
+        table (host_state plus this round's admissions). The admission
+        record (robots verdict + body + initial priority) is written
+        ONCE as a host_robots delta and the slim scheduling row derived
+        from it, so bodies never enter the broadcast scheduling table.
+        With ``pending_new_hosts == 0`` (the steady state) admission is
+        a no-op and its anti-join, UDF and delta write are skipped."""
+        host_state = self.cat.read("host_state")
+        if self.state.pending_new_hosts == 0:
+            return host_state
+        hosts_obs = Observation()
+        new_delta = self.cat.append_delta(
+            "host_robots",
+            self._robots_for_new_hosts(frontier, host_state).observe(
+                hosts_obs, F.count(F.lit(1)).alias("n")
+            ),
+        )
+        # observed on the delta write itself — no separate count job
+        self.state.total_hosts += int(hosts_obs.get["n"])
+        return host_state.unionByName(
+            new_delta.select("host", "delay", "priority").withColumn(
+                "ever_popped", F.lit(False)
+            )
+        )
+
+    def _schedule(self, frontier: DataFrame, host_state: DataFrame) -> DataFrame:
+        """J2 + W3 per-host FIFO rank + W4 per-host budget (+ W1 host
+        rank when host-limited): the round's candidate wave."""
+        cfg, st = self.cfg, self.state
         # J2: slim scheduling join (no robots bodies) — broadcast while
         # the host universe fits, shuffle-hash on host past the gate
         cand = self._wave_join(
             frontier, host_state, "host", "inner", st.total_hosts
         )
-
         if cfg.salt_n > 1:
             # O9: two-phase top-B per host so one mega-host cannot
             # serialize a single window task. Phase 1 ranks within
             # (host, salt); phase 2 ranks the ≤ salt_n*B survivors.
-            budget_max = cfg.max_urls_per_host_per_round
             salt = F.pmod(F.xxhash64("url"), F.lit(cfg.salt_n))
             w1 = Window.partitionBy("host", salt).orderBy("discovered_seq")
             cand = (
                 cand.withColumn("_rs", F.row_number().over(w1))
-                .filter(F.col("_rs") <= budget_max)
+                .filter(F.col("_rs") <= cfg.max_urls_per_host_per_round)
                 .drop("_rs")
             )
         w_host = Window.partitionBy("host").orderBy("discovered_seq")
         cand = cand.withColumn("rn_host", F.row_number().over(w_host))
-
-        # per-host politeness budget for this round (W4)
         budget = F.least(
             F.lit(cfg.max_urls_per_host_per_round),
             F.greatest(
@@ -948,51 +1013,38 @@ class CrawlEngine:
             ).cast("int"),
         )
         cand = cand.filter(F.col("rn_host") <= budget)
-
-        if cfg.hosts_per_round is not None:
-            # W1 strict host rank — only used in host-limited mode
-            # (global sort of the distinct-host set; skipped in scale
-            # mode). Under priority_mode != "fifo" the order becomes
-            # (rank_score DESC, priority, host): importance-aware
-            # crawling, high-rank hosts scheduled first.
-            host_set = cand.select("host", "priority").distinct()
-            order = [F.col("priority"), F.col("host")]
-            if cfg.priority_mode != "fifo":
-                self._refresh_host_ranks()
-                if self._rank_df is not None:
-                    host_set = self._wave_join(
-                        host_set, self._rank_df, "host", "left",
-                        st.total_hosts,
-                    ).withColumn(
-                        "rank_score",
-                        F.coalesce("rank_score", F.lit(-1.0)),
-                    )
-                    order = [F.desc("rank_score")] + order
-            hosts_ranked = (
-                host_set
-                .withColumn(
-                    "host_rank",
-                    F.row_number().over(Window.orderBy(*order)),
+        if cfg.hosts_per_round is None:
+            return cand
+        # W1 strict host rank, host-limited mode only (a global sort of
+        # the distinct-host set). Under priority_mode != "fifo" the
+        # order becomes (rank_score DESC, priority, host): high-rank
+        # hosts are scheduled first.
+        host_set = cand.select("host", "priority").distinct()
+        order = [F.col("priority"), F.col("host")]
+        if cfg.priority_mode != "fifo":
+            self._refresh_host_ranks()
+            if self._rank_df is not None:
+                host_set = self._wave_join(
+                    host_set, self._rank_df, "host", "left", st.total_hosts,
+                ).withColumn(
+                    "rank_score", F.coalesce("rank_score", F.lit(-1.0))
                 )
-                .filter(F.col("host_rank") <= cfg.hosts_per_round)
-            )
-            cand = cand.join(F.broadcast(hosts_ranked.select("host")), "host")
+                order = [F.desc("rank_score")] + order
+        hosts_ranked = host_set.withColumn(
+            "host_rank", F.row_number().over(Window.orderBy(*order))
+        ).filter(F.col("host_rank") <= cfg.hosts_per_round)
+        return cand.join(F.broadcast(hosts_ranked.select("host")), "host")
 
-        # ---- F1/F2 gates + J3 metadata join (HEAD phase, O2) -----------
-        # join shape: the corpus-side table is streamed against a
-        # BROADCAST of this round's candidate urls (inner), and the
-        # left-outer semantics are recovered with a small-small join.
-        # The corpus never shuffles — at 10^10 pages a per-round
-        # sort-merge of the pages table would dwarf everything else.
-        # the wave size drives the O13 gates; it rides the checkpoint
-        # materialization as an Observation instead of a count() job
-        # over the cached blocks (one fewer job barrier per round)
-        cand_obs = Observation()
-        cand = checkpoint(cand.observe(cand_obs, F.count(F.lit(1)).alias("n")))
-        n_cand = int(cand_obs.get["n"])
+    def _gate_fetch(
+        self, cand: DataFrame, n_cand: int, t_round: float
+    ) -> DataFrame:
+        """F1/F2 gates, then S3 HEAD (F3-F5) and W4 attempt timestamps:
+        offline through the J3 corpus metadata join and native window
+        arithmetic, live inside the per-host transport executor (same
+        law, identical timestamps). Returns the round's attempts."""
         # F2 inputs: robots bodies for THIS WAVE's hosts only — joined
         # from the append-only host_robots table, never broadcast
-        # wholesale (the scheduling broadcast above is body-free)
+        # wholesale (the scheduling broadcast is body-free)
         wave_robots = self._wave_join(
             self.cat.read("host_robots").select("host", "robots_body"),
             cand.select("host").distinct(),
@@ -1008,112 +1060,99 @@ class CrawlEngine:
             )                                                                # F2
             .drop("robots_body")  # bodies must not enter the sel checkpoint
         )
-        if cfg.transport is not None:
-            # ---- LIVE path: S3 HEAD + W4 wait + S4 GET through the
-            # transport inside the per-host executor; the checkpoint
-            # below materializes the fetched bytes (a live crawl
+        if self.cfg.transport is not None:
+            # S3 HEAD + W4 wait + S4 GET through the transport; the sel
+            # checkpoint materializes the fetched bytes (a live crawl
             # cannot re-run the network side of the plan)
-            sel = self._fetch_apply_in_pandas_live(gated, t_round)
-        else:
-            cand_meta = self._wave_join(
-                self.pages_meta, cand.select("url"), "url", "inner", n_cand
+            return self._fetch_apply_in_pandas_live(gated, t_round)
+        # O2 HEAD phase: the corpus metadata is streamed against a
+        # BROADCAST of this round's candidate urls (inner) and the
+        # left-outer semantics recovered with a small-small join — the
+        # corpus never shuffles (at 10^10 pages a per-round sort-merge
+        # of the pages table would dwarf everything else)
+        cand_meta = self._wave_join(
+            self.pages_meta, cand.select("url"), "url", "inner", n_cand
+        )
+        sel = (
+            self._wave_join(gated, cand_meta, "url", "left", n_cand)         # S3/J3
+            .withColumn(
+                "head_ok",
+                F.col("status").isNotNull()
+                & F.col("content_type").contains("text/html"),               # F3/F5
             )
-            sel = (
-                self._wave_join(gated, cand_meta, "url", "left", n_cand)     # S3/J3
-                .withColumn(
-                    "head_ok",
-                    F.col("status").isNotNull()
-                    & F.col("content_type").contains("text/html"),           # F3/F5
-                )
-                .withColumn(
-                    "should_access",
-                    F.col("allowed") & F.col("ext_ok") & F.col("head_ok"),
-                )
-                .withColumn(
-                    "fetched",
-                    F.col("should_access") & F.col("status").between(200, 299),  # F4
-                )
+            .withColumn(
+                "should_access",
+                F.col("allowed") & F.col("ext_ok") & F.col("head_ok"),
             )
+            .withColumn(
+                "fetched",
+                F.col("should_access") & F.col("status").between(200, 299),  # F4
+            )
+        )
+        # W4: each host starts at max(clock, priority) and every
+        # fetch-consuming attempt before a row adds one delay
+        w_seq = (
+            Window.partitionBy("host")
+            .orderBy("rn_host")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        consumed_before = F.coalesce(
+            F.sum(F.col("should_access").cast("int")).over(w_seq), F.lit(0)
+        )
+        return sel.withColumn(
+            "attempt_ts",
+            F.greatest(F.lit(t_round), F.col("priority"))
+            + consumed_before * F.col("delay"),
+        )
 
-        # ---- W4 politeness: per-host attempt timestamps ----------------
-        # (a live round assigned attempt_ts inside its executor)
+    def _truncate_to_budget(self, sel: DataFrame, scal) -> tuple:
+        """A1 final-round exact landing: when this round would overshoot
+        the page budget, keep only the attempts with fewer fetches
+        before them than the budget has left. Exact global cumulative
+        fetch count WITHOUT a
+        single-task window (operators/prefix.py: range-partition on the
+        order keys, partition-local cumsum, O(P) driver prefix
+        offsets). Returns (sel, its scalars, truncated)."""
+        cfg, st = self.cfg, self.state
+        if cfg.limit is None or st.total_fetched + (scal["n_fet"] or 0) <= cfg.limit:
+            return sel, scal, False
+        tagged = attach_prefix_count(
+            sel, ["attempt_ts", "priority", "host", "rn_host"], "fetched", "_cumf"
+        )
+        obs = Observation()
+        out = checkpoint(
+            tagged.filter(F.col("_cumf") < F.lit(cfg.limit - st.total_fetched))
+            .drop("_cumf")
+            .observe(obs, *_scalar_aggs())
+        )
+        free(tagged._prefix_ckpt)
+        free(sel)
+        return out, obs.get, True
+
+    def _write_fetched(
+        self, sel: DataFrame, n_fet: int, host_writes: list
+    ) -> tuple[DataFrame, DataFrame]:
+        """S4 GET + P6-P11 parse + S5 sink in one pass (O2), the seen
+        append and the trap-filter deltas; returns (a reader over the
+        pages delta just written, the appended seen table). The html is
+        parsed ONCE inside the parquet write; no row cache (a
+        localCheckpoint would serialize the text column twice and
+        anti-scales with cores). The page write, the seen append and
+        ``host_writes`` read only the sel blocks and old snapshot dirs,
+        so they run from concurrent driver threads and the small writes
+        ride along with the big fetch+parse scan."""
+        cfg, st = self.cfg, self.state
+        fetched_src = sel.filter("fetched")
         if cfg.transport is None:
-            # native window arithmetic (virtual clock, codegen path)
-            start_h = F.greatest(F.lit(t_round), F.col("priority"))
-            w_seq = (
-                Window.partitionBy("host")
-                .orderBy("rn_host")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            consumed_before = F.coalesce(
-                F.sum(F.col("should_access").cast("int")).over(w_seq), F.lit(0)
-            )
-            sel = sel.withColumn(
-                "attempt_ts", start_h + consumed_before * F.col("delay")
-            )
-        # round scalars (the old locked counters, WorkersPipeline.py:
-        # 24-26) ride the sel checkpoint as an Observation — zero
-        # dedicated jobs (observe metrics are collected by the
-        # localCheckpoint materialization itself; verified eager)
-        _SCALAR_AGGS = lambda: (  # noqa: E731 — one-liner per call site
-            F.count(F.lit(1)).alias("n_att"),
-            F.sum(F.col("fetched").cast("int")).alias("n_fet"),
-            F.min("priority").alias("min_popped"),
-            F.max(
-                F.when(
-                    F.col("should_access"),
-                    F.col("attempt_ts") + F.col("delay"),
-                )
-            ).alias("max_requeue"),
-            F.max(
-                F.when(F.col("should_access"), F.col("attempt_ts"))
-            ).alias("max_fetch_ts"),
-        )
-        from pyspark.sql import Observation as _Obs
-
-        sel_obs = _Obs()
-        sel = checkpoint(sel.observe(sel_obs, *_SCALAR_AGGS()))  # reused ≥3×
-
-        scal = sel_obs.get
-        n_fetched_round = scal["n_fet"] or 0
-
-        # ---- A1 budget truncation (final-round exact landing) ----------
-        # Exact global cumulative fetch count WITHOUT a single-task
-        # window (operators/prefix.py: range-partition on the order
-        # keys, partition-local cumsum, O(P) driver prefix offsets).
-        truncated = False
-        if cfg.limit is not None and st.total_fetched + n_fetched_round > cfg.limit:
-            remaining = cfg.limit - st.total_fetched
-            order_cols = ["attempt_ts", "priority", "host", "rn_host"]
-            tagged = attach_prefix_count(sel, order_cols, "fetched", "_cumf")
-            trunc_obs = _Obs()
-            sel = checkpoint(
-                tagged.filter(F.col("_cumf") < F.lit(remaining))
-                .drop("_cumf")
-                .observe(trunc_obs, *_SCALAR_AGGS())
-            )
-            free(tagged._prefix_ckpt)
-            scal = trunc_obs.get
-            n_fetched_round = scal["n_fet"] or 0
-            truncated = True
-
-        # ---- GET phase + S5 sink, single pass (O2) ---------------------
-        # stream the html column against a broadcast of the fetch wave's
-        # keys, parse ONCE inside the pages_fetched parquet write, then
-        # re-read only the (links, keys) columns of the delta just
-        # written. No row cache: a localCheckpoint here would serialize
-        # the full text column twice and anti-scales with cores.
-        fetch_keys = sel.filter("fetched").select(
-            "url", "host", "bucket", "depth", "priority",
-            "rn_host", "attempt_ts", "delay",
-        )
-        if cfg.transport is not None:
-            # live mode: bodies came back from the transport inside
-            # the executor — no corpus join exists to re-read them
-            fetched_src = sel.filter("fetched")
-        else:
-            fetched_src = self._wave_join(                                   # S4
-                self.pages_html, fetch_keys, "url", "inner", n_fetched_round
+            # offline: the bodies come from the corpus (a live round's
+            # came back from the transport inside the executor)
+            fetched_src = self._wave_join(                                  # S4
+                self.pages_html,
+                fetched_src.select(
+                    "url", "host", "bucket", "depth", "priority",
+                    "rn_host", "attempt_ts", "delay",
+                ),
+                "url", "inner", n_fet,
             )
         fetched_full = (
             fetched_src
@@ -1135,89 +1174,13 @@ class CrawlEngine:
             "url", "host", "bucket", "fetched", F.lit(st.round).alias("round"),
             "attempt_ts", "discovered_seq",
         )
-
-        # ---- host_state priority updates (W2 re-queue + revive) --------
-        # depends only on the checkpointed `sel` + the old host_state
-        # dirs, so in scale mode its overwrite (and the metrics append)
-        # joins the pages∥seen job batch below and its wall clock is
-        # absorbed by the big fetch+parse scan. Parity mode needs the
-        # revive collect, which reads this round's new links (i.e. the
-        # written pages delta), so there it stays after the batch.
-        host_updates = sel.groupBy("host").agg(
-            F.max(
-                F.when(
-                    F.col("should_access"),
-                    F.col("attempt_ts") + F.col("delay"),
-                )
-            ).alias("requeue_ts"),
-            F.count("*").alias("attempted"),
-            F.sum(F.col("fetched").cast("int")).alias("n_fetched"),
-        )
-
-        def _host_state2(revived_rows: list) -> DataFrame:
-            # size-gated like every wave join: host_updates has one row
-            # per host attempted this round (bounded by n_att), which
-            # exceeds broadcast limits on a 10^7-host round
-            hs2 = self._wave_join(
-                host_state, host_updates, "host", "left", int(scal["n_att"] or 0)
-            )
-            if revived_rows:
-                revived_df = self.spark.createDataFrame(
-                    revived_rows, "host string, revive_ts double"
-                )
-                hs2 = hs2.join(F.broadcast(revived_df), "host", "left")
-            else:
-                hs2 = hs2.withColumn("revive_ts", F.lit(None).cast("double"))
-            return hs2.select(
-                "host", "delay",
-                F.coalesce("revive_ts", "requeue_ts", "priority").alias("priority"),
-                (F.col("ever_popped") | F.col("attempted").isNotNull()).alias(
-                    "ever_popped"
-                ),
-            ).coalesce(self.cfg.n_buckets)
-            # ^ the union-with-new-hosts otherwise grows the table's
-            # partition count every round (checkpoint preserves
-            # partitions, so N rounds would mean ~4N near-empty tasks
-            # per stage)
-
-        # ---- metrics (S7 + lineage) ------------------------------------
-        metrics_df = None
-        if cfg.collect_metrics:
-            metrics_df = host_updates.select(
-                F.lit(st.round).alias("round"),
-                "host",
-                "attempted",
-                F.coalesce("n_fetched", F.lit(0)).alias("fetched"),
-                (
-                    F.col("attempted") - F.coalesce("n_fetched", F.lit(0))
-                ).alias("skipped"),
-                F.spark_partition_id().alias("part_id"),
-            )
-
-        # the page write, the seen append, and (scale mode) the
-        # host_state overwrite + metrics append all read only the
-        # checkpointed `sel` blocks and old snapshot dirs — submit them
-        # from driver threads so the small bookkeeping writes ride
-        # along with the big fetch+parse scan instead of serializing
-        # after it (replaced dirs stay readable until commit_round)
-        batch = [
+        fetched_rows, seen = _join_jobs(
             lambda: self.cat.append_delta(
                 "pages_fetched", fetched_full, cfg.records_per_file
             ),
             lambda: self.cat.append("seen", attempts),
-        ]
-        host_state_written = False
-        if cfg.hosts_per_round is None:
-            batch.append(
-                lambda: self.cat.overwrite("host_state", _host_state2([]))
-            )
-            if metrics_df is not None:
-                _mdf = metrics_df
-                batch.append(lambda: self.cat.append("metrics", _mdf))
-            host_state_written = True
-        results = _join_jobs(*batch)
-        fetched_rows, seen = results[0], results[1]
-
+            *host_writes,
+        )[:2]
         if cfg.trap_filter:
             # per-host content-duplication state: one HLL register delta
             # + one count delta per round, built from the columnar
@@ -1238,8 +1201,72 @@ class CrawlEngine:
                     F.count(F.lit(1)).cast("long").alias("n")
                 ),
             )
+        return fetched_rows, seen
 
-        # ---- new links → frontier (P7/P8 → A5 → J1) --------------------
+    def _host_writes(
+        self, sel: DataFrame, n_att: int, host_state: DataFrame,
+        revived_rows: list,
+    ) -> list:
+        """The W2 re-queue/revive host_state overwrite and the S7 metrics
+        append, as thunks for a ``_join_jobs`` batch. Both read only the
+        checkpointed sel and the old host_state dirs."""
+        cfg, st = self.cfg, self.state
+        host_updates = sel.groupBy("host").agg(
+            F.max(
+                F.when(
+                    F.col("should_access"),
+                    F.col("attempt_ts") + F.col("delay"),
+                )
+            ).alias("requeue_ts"),
+            F.count("*").alias("attempted"),
+            F.sum(F.col("fetched").cast("int")).alias("n_fetched"),
+        )
+        # size-gated like every wave join: host_updates has one row per
+        # host attempted this round, which exceeds broadcast limits on
+        # a 10^7-host round
+        hs2 = self._wave_join(host_state, host_updates, "host", "left", n_att)
+        if revived_rows:
+            revived_df = self.spark.createDataFrame(
+                revived_rows, "host string, revive_ts double"
+            )
+            hs2 = hs2.join(F.broadcast(revived_df), "host", "left")
+        else:
+            hs2 = hs2.withColumn("revive_ts", F.lit(None).cast("double"))
+        # coalesce: the union with new hosts otherwise grows the
+        # table's partition count every round (~4N near-empty tasks
+        # per stage after N rounds)
+        hs2 = hs2.select(
+            "host", "delay",
+            F.coalesce("revive_ts", "requeue_ts", "priority").alias("priority"),
+            (F.col("ever_popped") | F.col("attempted").isNotNull()).alias(
+                "ever_popped"
+            ),
+        ).coalesce(cfg.n_buckets)
+        jobs = [lambda: self.cat.overwrite("host_state", hs2)]
+        if cfg.collect_metrics:
+            metrics_df = host_updates.select(
+                F.lit(st.round).alias("round"),
+                "host",
+                "attempted",
+                F.coalesce("n_fetched", F.lit(0)).alias("fetched"),
+                (
+                    F.col("attempted") - F.coalesce("n_fetched", F.lit(0))
+                ).alias("skipped"),
+                F.spark_partition_id().alias("part_id"),
+            )
+            jobs.append(lambda: self.cat.append("metrics", metrics_df))
+        return jobs
+
+    def _exchange_links(
+        self, frontier: DataFrame, host_state: DataFrame, sel: DataFrame,
+        n_att: int, fetched_rows: DataFrame, seen: DataFrame, revive: bool,
+    ) -> tuple:
+        """P7/P8 → A5 → J1 → W3: the links of this round's pages that
+        are neither seen nor pending, numbered FIFO per host after the
+        frontier rows this round did not attempt. Returns (the next
+        frontier, tagged ``_known`` per admitted host; new_links; the
+        revived (host, revive_ts) rows, [] unless ``revive``)."""
+        cfg, st = self.cfg, self.state
         # columnar delta read: text/title never leave the parquet files
         links = (
             fetched_rows.select(
@@ -1265,17 +1292,16 @@ class CrawlEngine:
             .drop("_rn")
         )
         remaining_frontier = self._wave_join(
-            frontier, sel.select("url"), "url", "left_anti", int(scal["n_att"] or 0)
+            frontier, sel.select("url"), "url", "left_anti", n_att
         )
         # J1: never re-attempt (seen) and never double-queue (pending).
         # seen holds one row per attempt, so the driver knows its size.
-        # The Bloom pre-pass (a filter build + a Python probe
-        # stage) only pays once seen outgrows the O13 broadcast cap;
-        # below it J1 is the plain exact anti-join and Spark picks the
-        # strategy (a small seen is auto-broadcast). The cap as the
-        # crossover is a proxy: it has not been measured against
-        # seen sizes near it.
-        n_seen = st.total_attempted + int(scal["n_att"] or 0)
+        # The Bloom pre-pass (a filter build + a Python probe stage)
+        # only pays once seen outgrows the O13 broadcast cap; below it
+        # J1 is the plain exact anti-join and Spark picks the strategy
+        # (a small seen is auto-broadcast). The cap as the crossover is
+        # a proxy: it has not been measured against seen sizes near it.
+        n_seen = st.total_attempted + n_att
         if cfg.seen_filter == "bloom" and n_seen > cfg.wave_broadcast_max_rows:
             new_links = anti_join_with_bloom(
                 links, seen, "url", expected_items=n_seen
@@ -1285,7 +1311,6 @@ class CrawlEngine:
         new_links = new_links.join(
             remaining_frontier.select("url"), "url", "left_anti"
         )
-
         # W3 discovered_seq: FIFO per host in discovery order
         w_disc = Window.partitionBy("host").orderBy(
             "parent_ts", "parent_prio", "parent_host", "url"
@@ -1302,27 +1327,38 @@ class CrawlEngine:
             ).alias("discovered_seq"),
             "parent_ts",
         )
-        if cfg.hosts_per_round is not None:
-            # parity mode reads new_links twice (revive scan + frontier
-            # union) — checkpoint so the window/anti-join tree runs once
+        revived_rows = []
+        if revive:
+            # new_links is read twice (revive scan + frontier union):
+            # checkpoint so the window/anti-join tree runs once (in
+            # scale mode the frontier write is its one materialization)
             new_links = checkpoint(new_links)
-        # scale mode: new_links feeds ONLY the frontier overwrite, so
-        # the parquet write below is its one materialization — no extra
-        # checkpoint job (every input leaf is already a parquet delta
-        # or a cached checkpoint block)
-
+            # a known idle host (previously popped, empty FIFO) that
+            # receives new links is re-scheduled at first arrival +
+            # delay (Worker.py:127-134). Exact revive timing is needed
+            # only for the total-order parity contract; in scale mode a
+            # revived host keeps its last requeue priority, which is
+            # politeness-legal (old requeue ≥ last fetch + delay) and
+            # saves one driver job per round.
+            revived_rows = (
+                new_links.groupBy("host")
+                .agg(F.min("parent_ts").alias("arrival_ts"))
+                .join(remaining_frontier.select("host").distinct(), "host", "left_anti")
+                .join(host_state.select("host", "delay", "ever_popped"), "host")
+                .filter(F.col("ever_popped"))
+                .select(
+                    "host",
+                    (F.col("arrival_ts") + F.col("delay")).alias("revive_ts"),
+                )
+                .collect()  # revived hosts are few (idle + re-linked)
+            )
         # tag rows by whether their host is already admitted: only
-        # new_links can carry unadmitted hosts (every host present in a
-        # frontier is admitted in that round), and the count rides the
-        # frontier write's existing Observation so next round can skip
-        # the admission jobs when it is zero. Same size-gated join
-        # shape the admission itself would run — moved, not added.
-        known_hosts = host_state.select("host").withColumn(
-            "_known", F.lit(True)
-        )
+        # new_links can carry unadmitted hosts (every frontier host is
+        # admitted in its round), and the commit observes the count so
+        # the next round can skip admission when it is zero
         nl_tagged = self._wave_join(
             new_links.drop("parent_ts"),
-            known_hosts,
+            host_state.select("host").withColumn("_known", F.lit(True)),
             "host",
             "left",
             st.total_hosts,
@@ -1332,38 +1368,17 @@ class CrawlEngine:
             .unionByName(nl_tagged)
             .repartition("bucket")
         )
+        return new_frontier, new_links, revived_rows
 
-        # revive: a known idle host (off the queue: previously popped,
-        # empty FIFO) receiving new links is re-scheduled at
-        # first-arrival + delay (Worker.py:127-134)
-        if cfg.hosts_per_round is not None:
-            # exact revive timing is only needed for the total-order
-            # parity contract (sequential mode); in scale mode a
-            # revived host keeps its last requeue priority, which is
-            # politeness-legal (old requeue ≥ last fetch + delay) and
-            # saves one driver job per round
-            hosts_with_pending = remaining_frontier.select("host").distinct()
-            revived_rows = (
-                new_links.groupBy("host")
-                .agg(F.min("parent_ts").alias("arrival_ts"))
-                .join(hosts_with_pending, "host", "left_anti")
-                .join(host_state.select("host", "delay", "ever_popped"), "host")
-                .filter(F.col("ever_popped"))
-                .select(
-                    "host",
-                    (F.col("arrival_ts") + F.col("delay")).alias("revive_ts"),
-                )
-                .collect()  # revived hosts are few (idle + re-linked)
-            )
-        else:
-            revived_rows = []
-
-        # ---- driver-scalar updates (the old locked globals) ------------
+    def _commit(
+        self, new_frontier: DataFrame, host_writes: list, scal,
+        revived_rows: list, ckpts: tuple,
+    ) -> int:
+        """Driver scalars (the old locked globals), the frontier write
+        (with any host_state/metrics writes still due), compaction, the
+        manifest row and snapshot GC. Returns the committed round."""
+        cfg, st = self.cfg, self.state
         min_popped = scal["min_popped"]
-        max_fetch_ts = scal["max_fetch_ts"]
-        n_attempted = scal["n_att"] or 0
-        max_revive = max((r["revive_ts"] for r in revived_rows), default=None)
-
         if min_popped is not None and (
             st.curr_min is None or min_popped < st.curr_min
         ):
@@ -1374,25 +1389,20 @@ class CrawlEngine:
         # currMax moves ONLY on the revive path: the reference bumps
         # currMaxDelay in addLinkToRequest when a KNOWN idle host
         # receives a link (Worker.py:128-132); the post-fetch re-push
-        # (Worker.py:199-200) never touches it. (Earlier versions also
-        # bumped on every re-queue — a documented deviation, now fixed;
-        # this also removes a whole per-round driver job.)
+        # (Worker.py:199-200) never touches it
+        max_revive = max((r["revive_ts"] for r in revived_rows), default=None)
         if max_revive is not None and max_revive > st.curr_max:
             st.curr_max = max_revive                    # Worker.py:130-132
-        if max_fetch_ts is not None and max_fetch_ts > st.clock:
-            st.clock = max_fetch_ts
+        if scal["max_fetch_ts"] is not None and scal["max_fetch_ts"] > st.clock:
+            st.clock = scal["max_fetch_ts"]
+        st.total_fetched += int(scal["n_fet"] or 0)
+        st.total_attempted += int(scal["n_att"] or 0)
 
-        st.total_fetched += n_fetched_round
-        st.total_attempted += int(n_attempted)
-
-        # scale mode already wrote host_state/metrics inside the fetch
-        # batch; parity mode writes them here (the revive collect above
-        # needed this round's new links first). The overwrites are
-        # independent (host_state2 reads only the old host_state dirs +
-        # checkpointed sel blocks; new_frontier reads the old frontier
-        # dirs + parquet deltas) and the catalog defers reclaiming
-        # replaced dirs until commit_round, so they run concurrently
-        # from driver threads.
+        # the frontier count (next round's D4 check, no isEmpty() job)
+        # and its unadmitted-host rows (next round's S2 skip) ride the
+        # write. The overwrites are independent and the catalog defers
+        # reclaiming replaced dirs until commit_round, so they run
+        # concurrently from driver threads.
         front_obs = Observation()
         new_frontier = new_frontier.observe(
             front_obs,
@@ -1401,32 +1411,20 @@ class CrawlEngine:
                 F.when(F.col("_known").isNull(), 1).otherwise(0)
             ).alias("new_host_rows"),
         ).drop("_known")
-        jobs = [lambda: self.cat.overwrite("frontier", new_frontier)]
-        if not host_state_written:
-            jobs.append(
-                lambda: self.cat.overwrite(
-                    "host_state", _host_state2(revived_rows)
-                )
-            )
-            if metrics_df is not None:
-                jobs.append(lambda: self.cat.append("metrics", metrics_df))
-        _join_jobs(*jobs)
-        # next round's D4 quiescence check reads this instead of
-        # running an isEmpty() job against the frontier snapshot
-        _fo = front_obs.get
-        st.frontier_rows = int(_fo["n"])
-        st.pending_new_hosts = int(_fo["new_host_rows"] or 0)
+        _join_jobs(
+            lambda: self.cat.overwrite("frontier", new_frontier), *host_writes
+        )
+        st.frontier_rows = int(front_obs.get["n"])
+        st.pending_new_hosts = int(front_obs.get["new_host_rows"] or 0)
         # free this round's checkpoint caches (iterative loops leak
         # cached RDD blocks otherwise — OOM after ~50 rounds)
-        for _df in (cand, sel, new_links):
-            free(_df)
+        for df in ckpts:
+            free(df)
         # drop py4j proxies promptly: every round creates hundreds of
         # JVM-side Dataset/plan objects that stay pinned until the
         # Python GC releases their proxies; a periodic JVM GC nudge
         # lets ContextCleaner reap dropped broadcasts/shuffles in
         # long driver loops (thousands of rounds)
-        import gc
-
         gc.collect()
         if st.round % 10 == 9:
             self.spark.sparkContext._jvm.System.gc()
@@ -1463,12 +1461,7 @@ class CrawlEngine:
             # after the commit so the compacted dirs are referenced by
             # a retained manifest row before anything is deleted
             self.cat.gc(cfg.gc_keep_rounds)
-        return {
-            "round": round_no,
-            "attempted": int(n_attempted),
-            "fetched": int(n_fetched_round),
-            "truncated": truncated,
-        }
+        return round_no
 
     # ------------------------------------------------------------------
     def run(self, seeds: DataFrame | None = None, verbose: bool = False) -> list[dict]:

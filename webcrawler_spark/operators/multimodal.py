@@ -508,8 +508,14 @@ def decode_jpeg(content: bytes) -> dict:
         if content[pos] != 0xFF:
             raise ValueError("JPEG marker desync")
         marker = content[pos + 1]
+        if marker == 0xFF:  # fill byte: any run may precede a marker (B.1.1.2)
+            pos += 1
+            continue
         if marker == 0xD9:  # EOI before SOS
             break
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM, stray RSTn: no length
+            pos += 2
+            continue
         seglen = int.from_bytes(content[pos + 2 : pos + 4], "big")
         seg = content[pos + 4 : pos + 2 + seglen]
         if marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,

@@ -29,12 +29,18 @@ Design:
   every commit — ``gc_keep_rounds`` bounds it. A row written before
   schemas were recorded has no ``schemas`` key; its tables are read
   with schema inference.
-* Two catalogs share the interface:
+* Two parquet catalogs share one data path (``_ParquetTables``: the
+  dir lists, recorded schemas and a single writer behind ``overwrite``
+  / ``append`` / ``append_delta`` / ``register_empty`` / ``compact``)
+  and differ only in what they do with replaced dirs and the state:
   - :class:`ParquetCatalog` — durable, resumable (used by the CLI and
-    the resumption tests).
+    the resumption tests): a manifest row per round, old dirs kept for
+    time travel until ``gc``.
   - :class:`MemoryCatalog` — ephemeral session-temp-dir variant for
-    tests/benchmarks (same parquet round-trip, no manifest durability;
-    see its docstring for why parquet rather than localCheckpoint).
+    tests/benchmarks (same parquet round-trip, state in memory, replaced
+    dirs deleted at the next ``commit_round``; see its docstring for why
+    parquet rather than localCheckpoint).
+  :class:`IcebergCatalog` implements the same interface natively.
 
 Scale note (10^10 URLs): `frontier`/`seen` carry a ``bucket`` column
 (= ``pmod(xxhash64(host), n_buckets)``) and every written dataset is
@@ -75,7 +81,94 @@ def _row_schemas(row: dict) -> dict[str, StructType]:
     return {t: StructType.fromJson(s) for t, s in row.get("schemas", {}).items()}
 
 
-class MemoryCatalog:
+class _ParquetTables:
+    """The data path both parquet catalogs share. One writer
+    (:meth:`_write`) adds one new dir per call: ``overwrite`` starts a
+    fresh dir list, ``append``/``append_delta`` extend it. It always
+    uses ``mode("overwrite")``: harmless in a fresh dir, and a resumed
+    durable crawl re-allocates the seq numbers of dirs its crashed
+    round may have written, uncommitted garbage it must clobber. A
+    replaced dir list goes to :meth:`_replaced`. Writes come from
+    concurrent driver threads, so seq and dir lists hold ``_lock``.
+    Neither catalog subclasses the other: perfbench wraps both classes'
+    methods by name, so an inherited wrapper would trace writes twice."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self._dirs: dict[str, list[str]] = {}
+        self._schemas: dict[str, StructType] = {}  # name -> last written schema
+        self._seq = 0
+        self._lock = threading.Lock()
+
+    def _replaced(self, dirs: list[str]) -> None:
+        """Called under ``_lock`` with a table's replaced dirs."""
+
+    def _new_dir(self, name: str) -> str:
+        with self._lock:
+            self._seq += 1
+            return os.path.join(self.root, name, f"d{self._seq:06d}")
+
+    def _write(
+        self, name: str, df: DataFrame, max_records_per_file: int = 0,
+        append: bool = False,
+    ) -> str:
+        d = self._new_dir(name)
+        w = df.write.mode("overwrite")
+        if max_records_per_file:
+            # O7: the reference rotated WARC files at 1,000 records
+            # (WarcFileSave.py:9); parquet's maxRecordsPerFile is the
+            # native equivalent — bounded output files per snapshot
+            w = w.option("maxRecordsPerFile", max_records_per_file)
+        w.parquet(d)
+        with self._lock:
+            self._schemas[name] = df.schema
+            if append:
+                self._dirs.setdefault(name, []).append(d)
+            else:
+                self._replaced(self._dirs.get(name) or [])
+                self._dirs[name] = [d]
+        return d
+
+    def read(self, name: str) -> Optional[DataFrame]:
+        return _scan(self.spark, self._dirs.get(name), self._schemas.get(name))
+
+    def overwrite(self, name: str, df: DataFrame) -> DataFrame:
+        return _scan(self.spark, [self._write(name, df)], df.schema)
+
+    def register_empty(self, name: str, df: DataFrame) -> DataFrame:
+        """An empty table WITHOUT a Spark job: no data dir, only the
+        schema (a durable resume reads it off the manifest row)."""
+        with self._lock:
+            self._schemas[name] = df.schema
+            self._replaced(self._dirs.get(name) or [])
+            self._dirs[name] = []
+        return self.read(name)
+
+    def append(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
+        self._write(name, df, max_records_per_file, append=True)
+        return self.read(name)
+
+    def append_delta(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
+        """Append and return a reader over ONLY the new delta files —
+        lets callers re-read a pruned column subset of what they just
+        wrote instead of caching the full rows."""
+        return _scan(
+            self.spark, [self._write(name, df, max_records_per_file, append=True)],
+            df.schema,
+        )
+
+    def compact(self, name: str) -> Optional[DataFrame]:
+        """Merge a table's delta dirs into one snapshot dir: bounds the
+        union fan-in of a table that gains one delta per round (the
+        durable manifest keeps the old dirs until ``gc``)."""
+        cur = self.read(name)
+        if cur is None:
+            return None
+        return self.overwrite(name, cur)
+
+
+class MemoryCatalog(_ParquetTables):
     """Ephemeral catalog: parquet snapshots in a session temp dir.
 
     Why parquet and not ``localCheckpoint``: a checkpoint's LogicalRDD
@@ -98,93 +191,14 @@ class MemoryCatalog:
     def __init__(self, spark: SparkSession, root: str | None = None):
         import tempfile
 
-        self.spark = spark
-        self.root = root or tempfile.mkdtemp(prefix="wcspark-cat-")
-        self._dirs: dict[str, list[str]] = {}
-        self._seq = 0
+        super().__init__(spark, root or tempfile.mkdtemp(prefix="wcspark-cat-"))
         self._state: dict = {}
-        # the engine submits independent table writes from concurrent
-        # driver threads (overlapped round jobs); seq allocation and
-        # dir-list mutation must be atomic, and replaced dirs must stay
-        # readable until the round commits (a sibling job may still be
-        # scanning them)
-        self._lock = threading.Lock()
         self._garbage: list[str] = []
-        self._schemas: dict[str, StructType] = {}  # name -> last written schema
 
-    def _new_dir(self, name: str) -> str:
-        with self._lock:
-            self._seq += 1
-            return os.path.join(self.root, name, f"d{self._seq:06d}")
-
-    def read(self, name: str) -> Optional[DataFrame]:
-        return _scan(self.spark, self._dirs.get(name), self._schemas.get(name))
-
-    def overwrite(self, name: str, df: DataFrame) -> DataFrame:
-        d = self._new_dir(name)
-        df.write.parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            old = self._dirs.get(name)
-            self._dirs[name] = [d]
-            if old:
-                # deferred: reclaimed at commit_round, so concurrent
-                # round jobs can still read the replaced snapshot
-                self._garbage.extend(old)
-        return _scan(self.spark, [d], df.schema)
-
-    def register_empty(self, name: str, df: DataFrame) -> DataFrame:
-        """Initialize a table as empty WITHOUT running a Spark job:
-        only the schema is recorded, and ``read`` synthesizes an empty
-        frame until the first real write. Crawl init registers three
-        empty tables (seen / host_state / host_robots); on the
-        ephemeral catalog a parquet write per table is ~1 s of pure
-        per-round-independent driver fixed cost — the kind that drags
-        the big-arm scaling ratio — for zero information."""
-        with self._lock:
-            self._schemas[name] = df.schema
-            old = self._dirs.pop(name, None)
-            if old:
-                self._garbage.extend(old)
-        return self.read(name)
-
-    def append(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
-        d = self._new_dir(name)
-        w = df.write
-        if max_records_per_file:
-            # O7: the reference rotated WARC files at 1,000 records
-            # (WarcFileSave.py:9); parquet's maxRecordsPerFile is the
-            # native equivalent — bounded output files per snapshot
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs.setdefault(name, []).append(d)
-        return self.read(name)
-
-    def append_delta(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
-        """Append and return a reader over ONLY the new delta files —
-        lets callers re-read a pruned column subset of what they just
-        wrote instead of caching the full rows."""
-        d = self._new_dir(name)
-        w = df.write
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs.setdefault(name, []).append(d)
-        return _scan(self.spark, [d], df.schema)
-
-    def compact(self, name: str) -> Optional[DataFrame]:
-        """Merge a table's delta dirs into one snapshot dir. Long
-        crawls append one `seen` delta per round; periodic compaction
-        keeps the union fan-in (and at scale, the file count the
-        anti-join must open) bounded."""
-        cur = self.read(name)
-        if cur is None:
-            return None
-        return self.overwrite(name, cur)
+    def _replaced(self, dirs: list[str]) -> None:
+        # deferred: reclaimed at commit_round, so concurrent round jobs
+        # can still read the replaced snapshot
+        self._garbage.extend(dirs)
 
     def commit_round(self, round_no: int, state: dict) -> None:
         self._state = dict(state)
@@ -205,7 +219,7 @@ class MemoryCatalog:
         return {"pruned_rounds": 0, "deleted_dirs": 0}
 
 
-class ParquetCatalog:
+class ParquetCatalog(_ParquetTables):
     """Durable snapshot catalog: parquet data dirs + manifest.json.
 
     Layout::
@@ -231,14 +245,9 @@ class ParquetCatalog:
         the latest row is the fork head), and ``_seq`` restarts above
         the MAX seq ever allocated so new data dirs can never clobber
         dirs referenced by the rounds being forked away."""
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         os.makedirs(root, exist_ok=True)
         self._manifest_path = os.path.join(root, "manifest.json")
-        self._dirs: dict[str, list[str]] = {}
-        self._schemas: dict[str, StructType] = {}
-        self._seq = 0
-        self._lock = threading.Lock()  # concurrent round-job writes
         self._as_of = as_of_round
         last = self._round_row(as_of_round)
         if last is not None:
@@ -322,70 +331,6 @@ class ParquetCatalog:
         # instance's head, so load_state()/_round_row must track it
         # (not keep filtering by the original as_of forever)
         self._as_of = None
-
-    # -- data ------------------------------------------------------------
-    def _new_dir(self, name: str) -> str:
-        with self._lock:
-            self._seq += 1
-            return os.path.join(self.root, name, f"d{self._seq:06d}")
-
-    def read(self, name: str) -> Optional[DataFrame]:
-        return _scan(self.spark, self._dirs.get(name), self._schemas.get(name))
-
-    def overwrite(self, name: str, df: DataFrame) -> DataFrame:
-        d = self._new_dir(name)
-        # mode("overwrite"): after a mid-round crash, _seq resumes from
-        # the last COMMITTED manifest row, so the first writes of the
-        # resumed round re-allocate seq numbers whose dirs may already
-        # exist on disk (written by the crashed round, never committed).
-        # Those dirs are garbage by construction — the manifest is the
-        # commit point — so clobbering them is the correct resume.
-        df.write.mode("overwrite").parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs[name] = [d]
-        return _scan(self.spark, [d], df.schema)
-
-    def register_empty(self, name: str, df: DataFrame) -> DataFrame:
-        """Initialize a table as empty without a Spark job: the table
-        gets no data dir, and its schema rides the manifest row, which
-        is all a resume needs to read it back as an empty frame."""
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs[name] = []
-        return self.read(name)
-
-    def append(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
-        d = self._new_dir(name)
-        w = df.write.mode("overwrite")
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs.setdefault(name, []).append(d)
-        return self.read(name)
-
-    def append_delta(self, name: str, df: DataFrame, max_records_per_file: int = 0) -> DataFrame:
-        """Append; return a reader over only the new delta files."""
-        d = self._new_dir(name)
-        w = df.write.mode("overwrite")
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(d)
-        with self._lock:
-            self._schemas[name] = df.schema
-            self._dirs.setdefault(name, []).append(d)
-        return _scan(self.spark, [d], df.schema)
-
-    def compact(self, name: str) -> Optional[DataFrame]:
-        """Merge delta dirs into one snapshot dir (manifest keeps old
-        dirs referenced by prior rounds; nothing is deleted — pair
-        with :meth:`gc` to reclaim on long crawls)."""
-        cur = self.read(name)
-        if cur is None:
-            return None
-        return self.overwrite(name, cur)
 
     def gc(self, keep_rounds: int = 8) -> dict:
         """Snapshot-retention GC (Iceberg ``expire_snapshots`` analog):
