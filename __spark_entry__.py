@@ -1997,10 +1997,7 @@ def _q_cleaning_funnel(spark, sf):
     return a.crossJoin(b)
 
 
-def _q_pipeline_funnel(
-    spark, sf, quality_tier: str = "exact", docs_df=None, lined_df=None,
-    gopher_overrides=None, neardup_overrides=None,
-):
+def _q_pipeline_funnel(spark, sf, quality_tier: str = "exact"):
     """THE end-to-end training-data pipeline (round-3 verdict ask #6):
     eleven production stages composed in production order over one
     corpus, one oracled survivor-count per stage —
@@ -2048,17 +2045,10 @@ def _q_pipeline_funnel(
         unigram_logprob,
     )
 
-    # docs_df/lined_df: scale-bench overrides — same schema, real
-    # crawled corpus, linear line construction (the _lined_docs
-    # slice-per-segment build is fine at sf doc lengths, quadratic at
-    # 4k-word crawl pages). Defaults preserve the oracle tier.
-    d = docs_df if docs_df is not None else _docs(spark, sf)
+    d = _docs(spark, sf)
 
     # stage 1: C4 line filter over the deterministic lined docs
-    c4 = c4_line_filter(
-        lined_df if lined_df is not None else _lined_docs(spark, sf),
-        min_words=3,
-    )
+    c4 = c4_line_filter(_lined_docs(spark, sf), min_words=3)
     flat = c4.select(
         "doc_id",
         F.regexp_replace("clean_text", "\n", " ").alias("text"),
@@ -2076,10 +2066,10 @@ def _q_pipeline_funnel(
     corpus = flat.unionByName(mirrors).unionByName(variants).localCheckpoint()
     c4k = corpus.where("keep_c4").drop("keep_c4")
 
-    # stage 2: Gopher doc-stats gate (defaults tuned to the sf docs'
-    # ~60-word shape; gopher_overrides retunes for e.g. the 4k-word
-    # scale-bench corpus where max_words=80 would cut everything)
-    gop_kwargs = dict(
+    # stage 2: Gopher doc-stats gate (thresholds tuned to the sf
+    # docs' ~60-word shape)
+    gop = gopher_quality_flags(
+        c4k,
         min_words=20,
         max_words=80,
         min_avg_word_len=3.0,
@@ -2088,8 +2078,6 @@ def _q_pipeline_funnel(
         min_stopword_hits=2,
         max_dup_2gram_ratio=0.05,
     )
-    gop_kwargs.update(gopher_overrides or {})
-    gop = gopher_quality_flags(c4k, **gop_kwargs)
     g = c4k.join(gop.where("keep").select("doc_id"), "doc_id")
 
     # stage 3: exact dedup — min-doc_id keeper per md5 digest
@@ -2099,12 +2087,7 @@ def _q_pipeline_funnel(
     ex = ex.localCheckpoint()
 
     # stage 4: LSH candidates → Jaccard ≥ 0.8 → drop the larger id
-    # (neardup_overrides: the scale bench passes the S-curve and
-    # Arrow tier knobs here; defaults preserve the oracle tier)
-    pairs = near_duplicate_pairs(
-        ex.select("doc_id", "text"), threshold=0.8,
-        **(neardup_overrides or {}),
-    )
+    pairs = near_duplicate_pairs(ex.select("doc_id", "text"), threshold=0.8)
     nd = ex.join(
         pairs.select(F.col("b").alias("doc_id")).distinct(),
         "doc_id",

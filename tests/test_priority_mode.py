@@ -132,6 +132,8 @@ def test_unknown_mode_raises():
         ({"seen_filter": "cuckoo"}, "seen_filter"),
         ({"hosts_per_round": 0}, "hosts_per_round"),
         ({"max_urls_per_host_per_round": 0}, "max_urls_per_host_per_round"),
+        ({"n_buckets": 0}, "n_buckets"),
+        ({"gc_keep_rounds": -1}, "gc_keep_rounds"),
     ],
 )
 def test_bad_config_fails_at_construction(kwargs, match):

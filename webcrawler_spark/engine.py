@@ -124,9 +124,6 @@ def _scalar_aggs() -> tuple:
         F.count(F.lit(1)).alias("n_att"),
         F.sum(F.col("fetched").cast("int")).alias("n_fet"),
         F.min("priority").alias("min_popped"),
-        F.max(
-            F.when(F.col("should_access"), F.col("attempt_ts") + F.col("delay"))
-        ).alias("max_requeue"),
         F.max(F.when(F.col("should_access"), F.col("attempt_ts"))).alias(
             "max_fetch_ts"
         ),
@@ -251,9 +248,16 @@ class CrawlConfig:
                     f"unknown {name} {getattr(self, name)!r}"
                     f" (expected one of {allowed})"
                 )
-        for name in ("hosts_per_round", "max_urls_per_host_per_round"):
-            if getattr(self, name) is not None and getattr(self, name) < 1:
-                raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
+        for name, least in (
+            ("hosts_per_round", 1),
+            ("max_urls_per_host_per_round", 1),
+            ("n_buckets", 1),
+            ("gc_keep_rounds", 0),
+        ):
+            if getattr(self, name) is not None and getattr(self, name) < least:
+                raise ValueError(
+                    f"{name} must be >= {least}, got {getattr(self, name)}"
+                )
         if self.priority_mode != "fifo" and self.hosts_per_round is None:
             raise ValueError(
                 f"priority_mode {self.priority_mode!r} orders the"

@@ -31,7 +31,7 @@ from html.parser import HTMLParser as _StdHTMLParser
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BooleanType, StringType
+from pyspark.sql.types import StringType
 
 try:  # available in this sandbox; gate anyway (import-try per build rules)
     from charset_normalizer import from_bytes as _cn_from_bytes
@@ -191,15 +191,3 @@ def first_n_words(text: str, n: int = 20) -> str:
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """P6+P9 over a binary html column, Arrow-batched."""
     return html.map(lambda b: visible_text(decode_html_bytes(b)), na_action="ignore")
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_hrefs_udf(html: pd.Series) -> pd.Series:
-    """P6+P7 over a binary html column → array of raw hrefs."""
-    return html.map(lambda b: extract_hrefs(decode_html_bytes(b)), na_action="ignore")
-
-
-@pandas_udf(StringType())
-def title_udf(html: pd.Series) -> pd.Series:
-    """P11 over a binary html column."""
-    return html.map(lambda b: page_title(decode_html_bytes(b)), na_action="ignore")

@@ -1,4 +1,4 @@
-"""URL scalar functions (SURVEY.md §2.2 rows P1-P5, P8; §2.3 F1/F6/F8).
+"""URL scalar functions (SURVEY.md §2.2 rows P1-P4, P8; §2.3 F1/F6/F8).
 
 Reference semantics (cited per function, files under /root/reference/):
 
@@ -7,8 +7,6 @@ Reference semantics (cited per function, files under /root/reference/):
 * link formatting     — Parser.py:26-46 (fragment strip, root-relative
   resolution, http→https rewrite, relative/mailto dropped)
 * extension blocklist — Worker.py:13-30 (literal last-3/last-4 chars)
-* host→partition hash — utils.py:51-52 (builtin hash ⇒ replaced by the
-  deterministic xxhash64, SURVEY.md §4 note on P5)
 
 Two surfaces are provided for each operation:
 
@@ -32,7 +30,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BooleanType, StringType
+from pyspark.sql.types import ArrayType, StringType
 
 # ---------------------------------------------------------------------------
 # P1 — URL normalization (pure Python, RFC 3986 subset)
@@ -220,16 +218,6 @@ def resource_col(url: Column) -> Column:
 def url_col(host: Column, resource: Column) -> Column:
     """P4 as a native expression."""
     return F.concat(host, resource)
-
-
-# ---------------------------------------------------------------------------
-# P5 — host → partition id (deterministic xxhash64 replaces builtin hash)
-# ---------------------------------------------------------------------------
-
-
-def host_partition_col(host: Column, num_partitions: int) -> Column:
-    """Deterministic replacement for utils.py:51-52 `abs(hash(h)%N)`."""
-    return F.pmod(F.xxhash64(host), F.lit(num_partitions)).cast("int")
 
 
 # ---------------------------------------------------------------------------

@@ -21,12 +21,14 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-import math
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators.textstats import fingerprint, sliding_ngrams
+
+_MICRO = Decimal("0.000001")  # the verify tiers' 6-decimal Jaccard rounding
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -501,9 +503,16 @@ def _jaccard_verify_arrow(
                 union = len(sa | sb)
                 if union == 0:
                     continue
-                # HALF_UP like the exact tier's F.round (Python's
-                # round() is half-even: 65/128 would give 0.507812)
-                j = math.floor(len(sa & sb) / union * 1e6 + 0.5) / 1e6
+                # HALF_UP on the double's shortest decimal string, like
+                # the exact tier's F.round (Scala BigDecimal(d)): Python's
+                # round() is half-even (65/128 would give 0.507812), and
+                # scaling by 1e6 first is inexact (323/640 = 0.5046875
+                # would give 0.504687)
+                j = float(
+                    Decimal(repr(len(sa & sb) / union)).quantize(
+                        _MICRO, ROUND_HALF_UP
+                    )
+                )
                 if j >= threshold:
                     out_a.append(a)
                     out_b.append(b)

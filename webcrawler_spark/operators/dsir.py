@@ -37,8 +37,6 @@ toward the LLM-training-pipeline tier the graft brief requires.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from webcrawler_spark.operators.textstats import words_col
@@ -178,8 +176,3 @@ def dsir_sample(
         "rank",
         F.row_number().over(Window.orderBy(F.desc("key"), F.col(id_col))),
     )
-
-
-def math_expected_gumbel(u: float) -> float:
-    """Reference implementation of the Gumbel transform for tests."""
-    return -math.log(-math.log(u))

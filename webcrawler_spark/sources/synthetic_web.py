@@ -222,7 +222,6 @@ def build_big_web(
     links_per_page: int = 8,
     partitions: int = 32,
     body_kb: int = 0,
-    body_mode: str = "repeat",
 ) -> DataFrame:
     """A hosts×pages synthetic web generated fully inside Spark.
 
@@ -272,48 +271,7 @@ def build_big_web(
     # HTML averages tens of KB) with deterministic per-page filler, so
     # benchmarks exercise parse/decode at honest per-row cost instead
     # of being dominated by per-round fixed overhead
-    if body_kb and body_mode == "diverse":
-        # per-page UNIQUE text with a two-tier zipf-ish vocabulary
-        # (70% from a 100-word head, 30% from a 10^6-word tail): the
-        # crawl cost per byte matches "repeat" mode, but dedup /
-        # sketch / LM operators see realistic shingle diversity and
-        # cardinalities instead of one boilerplate sentence 544×
-        # (which collapses MinHash to a 97-way near-identical
-        # partition and explodes the candidate pair set) — used by
-        # scripts/bench_scale_analytics.py
-        def word(k):
-            return F.concat(
-                F.lit("w"),
-                F.when(
-                    F.pmod(F.xxhash64(F.col("id"), k, F.lit(7)), 10) < 7,
-                    F.pmod(F.xxhash64(F.col("id"), k), 100),
-                )
-                .otherwise(
-                    F.pmod(F.xxhash64(F.col("id"), k, F.lit(13)), 1000000)
-                )
-                .cast("string"),
-            )
-
-        def block(b):
-            return F.concat(
-                F.lit("<p>"),
-                F.array_join(
-                    F.transform(
-                        F.sequence(b * 12, b * 12 + 11), word
-                    ),
-                    " ",
-                ),
-                F.lit(".</p>"),
-            )
-
-        # ~92 bytes per 12-word block → ≈11 blocks per KiB
-        filler = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(body_kb * 11 - 1)), block
-            ),
-            "",
-        )
-    elif body_kb:
+    if body_kb:
         filler = F.repeat(
             F.concat(
                 F.lit("<p>w"),

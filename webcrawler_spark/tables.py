@@ -281,9 +281,6 @@ class ParquetCatalog(_ParquetTables):
             )
         return eligible[-1]
 
-    def _last_round(self) -> Optional[dict]:
-        return self._round_row(None)
-
     def load_state(self) -> Optional[dict]:
         last = self._round_row(self._as_of)
         return dict(last["state"]) if last else None
