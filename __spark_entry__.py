@@ -26,6 +26,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from webcrawler_spark.pipelines.funnel import MIX_RATES as _MIX_RATES
+from webcrawler_spark.pipelines.funnel import PACK_SEQ_LEN as _PACK_SEQ_LEN
+
 SF0001 = "/root/testdata/sf0.001"
 
 
@@ -1548,9 +1551,6 @@ def _q_duplicated_ngrams(spark, sf):
     return duplicated_ngrams(_docs(spark, sf), k=8)
 
 
-_MIX_RATES = {"en": 0.5, "zh": 0.25, "es": 0.75}
-
-
 def _q_mixture_sample(spark, sf):
     """Deterministic stratified mixture sampling: keep rate by lang,
     decided by md5(doc_id) so the sample is bit-reproducible across
@@ -1755,9 +1755,6 @@ def _q_quality_mixture(spark, sf):
         rates=[0.3, 1.0, 0.6],
         score_col="avg_logp",
     ).select("doc_id", "n_tokens", "avg_logp", "bucket")
-
-
-_PACK_SEQ_LEN = 128
 
 
 def _q_pack_chunks(spark, sf):
@@ -1999,185 +1996,20 @@ def _q_cleaning_funnel(spark, sf):
 
 def _q_pipeline_funnel(spark, sf, quality_tier: str = "exact"):
     """THE end-to-end training-data pipeline (round-3 verdict ask #6):
-    eleven production stages composed in production order over one
-    corpus, one oracled survivor-count per stage —
+    ``webcrawler_spark.pipelines.funnel`` runs its eleven stages over
+    the sf documents and their lined twin and counts each stage's
+    survivors once. The funnel runs when this is called; the returned
+    frame is those counts as one driver-built row of 12 longs (n_raw ..
+    n_bpe_tokens). ``quality_tier`` picks the LM gate's tier:
+    "exact" (default, the oracle tier) or "approx" (the approx-quantile
+    scale tier). The DuckDB oracle replays all eleven stages in one CTE
+    chain."""
+    from webcrawler_spark.pipelines.funnel import COUNTS, funnel_counts
 
-      C4 line filter → Gopher stats gate → exact dedup (digest
-      keeper) → MinHash-LSH + Jaccard near-dup → 13-gram
-      decontamination → NB langid gate → CCNet LM head+middle →
-      per-domain cap → deterministic mixture → concat-chunk packing →
-      BPE-pretokenizer encode accounting
-
-    Planted work so every stage provably cuts: doc_id % 37 docs gain
-    an exact mirror (+10^9), doc_id % 41 docs a one-word near-dup
-    variant (+2·10^9, Jaccard (n-2)/(n-1) ≈ 0.95 ≥ the 0.8 verify
-    bar); the cleaned doc_id % 50 slice doubles as the eval suite the
-    decontamination stage removes. Models are fit OFFLINE on the raw
-    corpus (NB langid on the even-doc_id half, the unigram LM on all
-    of it — the CCNet shape) and applied to the in-flight cleaned
-    text.
-
-    Scale shape: every stage is the audited plan of its standalone
-    query (codegen projections, digest-keyed dedup shuffle, banded LSH
-    joins, broadcast bench-grams/model/priors, two-level domain-cap
-    window, md5 mixture cut, distributed prefix-sum packing); the LM
-    quality gate is two-tier via ``quality_tier``: "exact" (default,
-    the oracle tier — TakeOrderedAndProject top-2/3) or "approx"
-    (the 100 TB tier — approx-quantile threshold filter, no count()
-    and no global sort). localCheckpoints truncate lineage at four
-    chokepoints so the twelve single-row aggregates don't recompute
-    the funnel. The DuckDB oracle replays all eleven stages in one
-    CTE chain."""
-    from webcrawler_spark.operators.cleaning import (
-        c4_line_filter,
-        decontaminate,
-        gopher_quality_flags,
-    )
-    from webcrawler_spark.operators.dedup import near_duplicate_pairs
-    from webcrawler_spark.operators.langid import fit_nb_langid, nb_langid
-    from webcrawler_spark.operators.mixing import domain_cap, mixture_sample
-    from webcrawler_spark.operators.packing import (
-        pack_concat_chunks,
-        token_count_col,
-    )
-    from webcrawler_spark.operators.textstats import (
-        bpe_token_count,
-        unigram_logprob,
-    )
-
-    d = _docs(spark, sf)
-
-    # stage 1: C4 line filter over the deterministic lined docs
-    c4 = c4_line_filter(_lined_docs(spark, sf), min_words=3)
-    flat = c4.select(
-        "doc_id",
-        F.regexp_replace("clean_text", "\n", " ").alias("text"),
-        F.col("keep").alias("keep_c4"),
-    ).join(d.select("doc_id", "lang", "source"), "doc_id")
-    mirrors = flat.where("doc_id % 37 = 0").select(
-        (F.col("doc_id") + F.lit(1000000000)).alias("doc_id"),
-        "text", "keep_c4", "lang", "source",
-    )
-    variants = flat.where("doc_id % 41 = 0").select(
-        (F.col("doc_id") + F.lit(2000000000)).alias("doc_id"),
-        F.concat("text", F.lit(" zzvariantzz")).alias("text"),
-        "keep_c4", "lang", "source",
-    )
-    corpus = flat.unionByName(mirrors).unionByName(variants).localCheckpoint()
-    c4k = corpus.where("keep_c4").drop("keep_c4")
-
-    # stage 2: Gopher doc-stats gate (thresholds tuned to the sf
-    # docs' ~60-word shape)
-    gop = gopher_quality_flags(
-        c4k,
-        min_words=20,
-        max_words=80,
-        min_avg_word_len=3.0,
-        max_avg_word_len=10.0,
-        max_symbol_ratio=0.1,
-        min_stopword_hits=2,
-        max_dup_2gram_ratio=0.05,
-    )
-    g = c4k.join(gop.where("keep").select("doc_id"), "doc_id")
-
-    # stage 3: exact dedup — min-doc_id keeper per md5 digest
-    dig = g.withColumn("dig", F.md5("text"))
-    keeper = dig.groupBy("dig").agg(F.min("doc_id").alias("doc_id"))
-    ex = dig.join(keeper, ["dig", "doc_id"], "left_semi").drop("dig")
-    ex = ex.localCheckpoint()
-
-    # stage 4: LSH candidates → Jaccard ≥ 0.8 → drop the larger id
-    pairs = near_duplicate_pairs(ex.select("doc_id", "text"), threshold=0.8)
-    nd = ex.join(
-        pairs.select(F.col("b").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_anti",
-    )
-
-    # stage 5: decontaminate vs the cleaned eval slice (doc_id % 50)
-    bench = corpus.where("keep_c4 and doc_id % 50 = 0").select("doc_id", "text")
-    dc = decontaminate(nd, bench, n=13).localCheckpoint()
-
-    # stage 6: NB langid gate — model fit offline on the raw even half
-    model, priors = fit_nb_langid(
-        d.where(F.col("doc_id") % 2 == 0), max_vocab=300
-    )
-    pred = nb_langid(dc, model, priors)
-    lg = dc.join(
-        pred.where("pred_lang = 'en'").select("doc_id"), "doc_id", "left_semi"
-    )
-
-    # stage 7: CCNet LM head+middle — keep the top 2/3 by unigram
-    # logprob under the raw-corpus model. Two tiers (round-4 verdict
-    # ask #5), same shape as every two-tier operator:
-    #   exact  (oracle tier, default): total-ordered top-ceil(2n/3)
-    #     on (score desc, doc_id) — count() + TakeOrderedAndProject,
-    #     deterministic and DuckDB-replayable, driver-coupled.
-    #   approx (scale tier): one Greenwald–Khanna aggregate computes
-    #     the 1/3 score quantile and the gate is a scan-local
-    #     `avg_logp >= threshold` filter — no count(), no global
-    #     sort; at 100 TB the only driver state is one double.
-    #     Boundary semantics: ties AT the threshold all survive
-    #     (superset of the exact cut; parity pinned in
-    #     tests/test_pipeline_funnel.py).
-    scores = unigram_logprob(lg, model_docs=d)
-    if quality_tier == "approx":
-        qs = scores.approxQuantile("avg_logp", [1.0 / 3.0], 0.001)
-        # approxQuantile returns [] on an empty scored set — then the
-        # gate is trivially empty-in/empty-out
-        top = (
-            scores.where(F.col("avg_logp") >= qs[0]) if qs else scores
-        ).select("doc_id")
-    else:
-        k_keep = -(-2 * scores.count() // 3)  # ceil(2n/3)
-        top = (
-            scores.orderBy(F.col("avg_logp").desc(), "doc_id")
-            .limit(k_keep)
-            .select("doc_id")
-        )
-    lq = lg.join(top, "doc_id", "left_semi").localCheckpoint()
-
-    # stage 8: per-domain cap (keep 4 per source, by doc_id)
-    cap = domain_cap(lq, host_col="source", k=4).drop("host_rank")
-
-    # stage 9: deterministic md5-cut mixture
-    mix = mixture_sample(cap, rates=_MIX_RATES, default_rate=0.1)
-    mix = mix.localCheckpoint()
-
-    # stages 10-11: packing + encode accounting
-    toks = mix.select(
-        "doc_id", token_count_col("text").cast("long").alias("n_tokens")
-    )
-    packed = pack_concat_chunks(toks, seq_len=_PACK_SEQ_LEN)
-
-    def cnt(df, name):
-        return df.agg(F.count(F.lit(1)).cast("long").alias(name))
-
-    return (
-        cnt(corpus, "n_raw")
-        .crossJoin(cnt(c4k, "n_c4"))
-        .crossJoin(cnt(g, "n_gopher"))
-        .crossJoin(cnt(ex, "n_exact"))
-        .crossJoin(cnt(nd, "n_neardup"))
-        .crossJoin(cnt(dc, "n_decontam"))
-        .crossJoin(cnt(lg, "n_lang"))
-        .crossJoin(cnt(lq, "n_quality"))
-        .crossJoin(cnt(cap, "n_cap"))
-        .crossJoin(cnt(mix, "n_mix"))
-        .crossJoin(
-            packed.agg(
-                F.coalesce(F.max("seq_last") + 1, F.lit(0))
-                .cast("long")
-                .alias("n_chunks")
-            )
-        )
-        .crossJoin(
-            mix.agg(
-                F.coalesce(F.sum(bpe_token_count(F.col("text"))), F.lit(0))
-                .cast("long")
-                .alias("n_bpe_tokens")
-            )
-        )
+    counts = funnel_counts(_docs(spark, sf), _lined_docs(spark, sf), quality_tier)
+    return spark.createDataFrame(
+        [tuple(counts[k] for k in COUNTS)],
+        ", ".join(f"{k} long" for k in COUNTS),
     )
 
 

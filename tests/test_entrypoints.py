@@ -8,7 +8,8 @@ every library name they use. Starts no Spark session.
   top level; anything else must be an installed module.
 * Traced names: every attribute the benchmark's traced mode wraps by
   name still exists, so deleting or renaming one fails here instead of
-  breaking ``perfbench/run.py --trace 1``.
+  breaking ``perfbench/run.py --trace 1``; and the funnel pipeline looks
+  those stages up at call time, so the wrappers see its calls.
 """
 
 from __future__ import annotations
@@ -104,16 +105,20 @@ def test_traced_crawl_names_exist():
     assert not missing, missing
 
 
-def test_traced_funnel_stages_exist():
-    """``perfbench/traced.py::install_funnel`` wraps each
-    ``FUNNEL_STAGES`` entry as ``webcrawler_spark.operators.<mod>.<fn>``."""
+def _funnel_stages():
     tree = ast.parse((ROOT / "perfbench" / "traced.py").read_text())
-    stages = next(
+    return next(
         ast.literal_eval(node.value)
         for node in tree.body
         if isinstance(node, ast.Assign)
         and any(getattr(t, "id", None) == "FUNNEL_STAGES" for t in node.targets)
     )
+
+
+def test_traced_funnel_stages_exist():
+    """``perfbench/traced.py::install_funnel`` wraps each
+    ``FUNNEL_STAGES`` entry as ``webcrawler_spark.operators.<mod>.<fn>``."""
+    stages = _funnel_stages()
     assert stages
     missing = [
         f"{mod}.{fn}"
@@ -123,3 +128,24 @@ def test_traced_funnel_stages_exist():
         )
     ]
     assert not missing, missing
+
+
+def test_funnel_pipeline_binds_no_stage_at_import():
+    """A module-level ``from webcrawler_spark.operators.<mod> import
+    <fn>`` (or ``x = <mod>.<fn>``) in the funnel pipeline would keep the
+    unwrapped function, and every traced ``operators.<fn>_s`` would
+    read 0."""
+    fns = {fn for _, fn in _funnel_stages()}
+    tree = ast.parse(
+        (ROOT / "webcrawler_spark" / "pipelines" / "funnel.py").read_text()
+    )
+    bound = []
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom):
+            bound += [a.name for a in node.names if a.name in fns]
+        elif isinstance(node, ast.Assign):
+            bound += [
+                n.attr for n in ast.walk(node.value)
+                if isinstance(n, ast.Attribute) and n.attr in fns
+            ]
+    assert not bound, bound

@@ -59,6 +59,21 @@ def test_vocab_cap_bounds_model(corpus):
     assert model.select("gram").distinct().count() == 7
 
 
+def test_lang_without_invocab_mass_keeps_dense_rows(spark):
+    # "xyz" is xx's only gram and falls outside the top-2 vocab {aaa, bbb}:
+    # xx keeps one row per vocab gram at logp = ln(1 / (0 + V))
+    train = spark.createDataFrame(
+        [(0, "aaaaaaaa", "en"), (1, "bbbbbbbb", "en"), (2, "xyz", "xx")],
+        "doc_id long, text string, lang string",
+    )
+    model, _ = fit_nb_langid(train, max_vocab=2)
+    rows = model.collect()
+    assert len(rows) == 2 * 2  # V × n_langs
+    xx = {r["gram"]: r["logp"] for r in rows if r["lang"] == "xx"}
+    assert set(xx) == {"aaa", "bbb"}
+    assert all(v == pytest.approx(-math.log(2)) for v in xx.values())
+
+
 def test_predict_recovers_labels(corpus):
     model, priors = fit_nb_langid(corpus, max_vocab=300)
     # held-out texts in each language's style

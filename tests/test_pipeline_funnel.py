@@ -8,11 +8,30 @@ import pytest
 import __spark_entry__ as e
 
 SF = "/root/testdata/sf0.001"
+# Spark jobs of one warm exact-tier execution at SF (a cut lowers the pin)
+FUNNEL_JOBS = 76
 
 
 @pytest.fixture(scope="module")
 def row(spark):
     return e.queries()["pipeline_funnel"](spark, SF).first()
+
+
+def test_funnel_job_budget(spark, row):
+    """Each stage is computed once and counted by the job that
+    checkpoints it, so one execution (after ``row`` has compiled every
+    stage) submits at most FUNNEL_JOBS jobs."""
+    sc = spark.sparkContext
+
+    def last_job():
+        # spark.ui.retainedJobs truncates the id list: count jobs by
+        # the newest id, not by the ids listed
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    j0 = last_job()
+    e.queries()["pipeline_funnel"](spark, SF).collect()
+    jobs = last_job() - j0
+    assert jobs <= FUNNEL_JOBS, jobs
 
 
 def test_stage_counts_monotone(row):

@@ -163,11 +163,10 @@ def test_dsir_plan_has_no_corpus_scale_killers(spark, entry, full_plans):
 def test_nb_langid_plan_broadcasts_model(spark, entry, full_plans):
     """NB language ID: the model/priors joins on the scoring path must
     ship broadcast and the corpus gram stream must never cross a
-    sort-merge join. The fit's vocab×langs cross join is deliberate
-    (≤ max_vocab × n_langs rows, both sides capped); the vocab cap's
-    TakeOrderedAndProject runs inside the fit-time collect (the
-    single-pass fit materializes the model eagerly), so the scoring
-    plan is asserted on the join strategy only."""
+    sort-merge join. The fit runs its aggregates inside fit-time
+    collects (the vocab cap's TakeOrderedAndProject and the in-vocab
+    counts) and builds the dense ≤ max_vocab × n_langs model on the
+    driver, so the scoring plan is asserted on the join strategy only."""
     q = entry.queries()
     plan = _plan(q["nb_langid"](spark, SF))
     assert "SortMergeJoin" not in plan

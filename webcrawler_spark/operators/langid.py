@@ -23,11 +23,14 @@ Two halves, both pure DataFrame algebra:
   vocabulary). Docs with no in-vocab gram are absent from the output.
 
 Plan shape at 100 TB: training is explode → one hash aggregate with
-map-side partial combine (the vocab cap is a TakeOrderedAndProject,
-never a global sort); the model is kilobytes by construction, so
-scoring is scan → explode → **broadcast** join → partial-agg groupBy
-(doc, lang) → per-doc window over ≤ n_langs rows. One shuffle of the
-per-doc partial sums; the corpus text itself never shuffles.
+map-side partial combine, persisted and read by two small collects:
+the vocab cap (a TakeOrderedAndProject, never a global sort) and the
+≤ ``max_vocab × n_langs`` in-vocab counts, grouped per lang. The dense
+vocab × langs model is built from those rows on the driver (no cross
+join); it is kilobytes by construction, so scoring is scan → explode
+→ **broadcast** join → partial-agg groupBy (doc, lang) → per-doc
+window over ≤ n_langs rows. One shuffle of the per-doc partial sums;
+the corpus text itself never shuffles.
 
 Reference parity note: the reference crawler (Pendulun/WebCrawler)
 has no language-ID stage; this extends the rebuilt engine toward the
@@ -84,9 +87,9 @@ def fit_nb_langid(
     )
     # ONE pass over the exploded gram stream: counts is persisted, the
     # vocab cap (TakeOrderedAndProject) collects ≤ max_vocab strings to
-    # the driver, and the dense model is materialized from the cache —
+    # the driver, and the in-vocab counts are collected from the cache —
     # without this the explode+aggregate would run once per downstream
-    # job (vocab, sizing, model, scoring), measured 3× at sf0.1
+    # job (vocab, model, scoring), measured 3× at sf0.1
     counts = grams.groupBy("lang", "gram").agg(F.count("*").alias("c")).persist()
     vocab_rows = [
         r["gram"]
@@ -97,26 +100,39 @@ def fit_nb_langid(
         .collect()
     ]
     v_size = len(vocab_rows)
-    vocab = spark.createDataFrame([(g,) for g in vocab_rows], "gram string")
-    langs = counts.select("lang").distinct()
-    # T_l over IN-VOCAB grams only, so the smoothing denominator and
-    # the kept counts describe the same event space
-    in_vocab = counts.join(F.broadcast(vocab), "gram")
-    totals = in_vocab.groupBy("lang").agg(F.sum("c").alias("t_l"))
-    model = (
-        vocab.crossJoin(langs)
-        .join(in_vocab, ["gram", "lang"], "left")
-        .join(totals, "lang", "left")  # a lang may have zero in-vocab mass
-        .select(
-            "gram",
-            "lang",
-            (
-                F.log((F.coalesce(F.col("c"), F.lit(0)) + F.lit(1.0)))
-                - F.log(F.coalesce(F.col("t_l"), F.lit(0)) + F.lit(float(v_size)))
-            ).alias("logp"),
+    # the in-vocab count rows (≤ max_vocab × n_langs) and every lang,
+    # one row per lang; a lang whose grams all fall outside the vocab
+    # collects an empty list and keeps its dense rows at c = t_l = 0
+    per_lang = (
+        counts.groupBy("lang")
+        .agg(
+            F.collect_list(
+                F.when(F.col("gram").isin(vocab_rows), F.struct("gram", "c"))
+            ).alias("cs")
         )
-    ).localCheckpoint(eager=True)  # ≤ max_vocab × n_langs rows
+        .collect()
+    )
     counts.unpersist()
+    # the dense vocab × langs table is built on the driver; a null lang
+    # keeps c = t_l = 0, as an equi-join on lang would give it
+    dense = []
+    for r in per_lang:
+        cs = {} if r["lang"] is None else {x["gram"]: x["c"] for x in r["cs"]}
+        # T_l over IN-VOCAB grams only, so the smoothing denominator
+        # and the kept counts describe the same event space
+        t_l = sum(cs.values())
+        dense += [(g, r["lang"], cs.get(g, 0), t_l) for g in vocab_rows]
+    # logp stays a Spark expression so the doubles match the JVM's log
+    model = spark.createDataFrame(
+        dense, "gram string, lang string, c long, t_l long"
+    ).select(
+        "gram",
+        "lang",
+        (
+            F.log(F.col("c") + F.lit(1.0))
+            - F.log(F.col("t_l") + F.lit(float(v_size)))
+        ).alias("logp"),
+    )
     # per-language doc priors: one label aggregate, built as literals
     # (n_langs rows) so predict-side joins are plan-free broadcasts
     label_rows = (
