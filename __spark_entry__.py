@@ -1994,19 +1994,17 @@ def _q_cleaning_funnel(spark, sf):
     return a.crossJoin(b)
 
 
-def _q_pipeline_funnel(spark, sf, quality_tier: str = "exact"):
+def _q_pipeline_funnel(spark, sf):
     """THE end-to-end training-data pipeline (round-3 verdict ask #6):
     ``webcrawler_spark.pipelines.funnel`` runs its eleven stages over
     the sf documents and their lined twin and counts each stage's
     survivors once. The funnel runs when this is called; the returned
     frame is those counts as one driver-built row of 12 longs (n_raw ..
-    n_bpe_tokens). ``quality_tier`` picks the LM gate's tier:
-    "exact" (default, the oracle tier) or "approx" (the approx-quantile
-    scale tier). The DuckDB oracle replays all eleven stages in one CTE
-    chain."""
+    n_bpe_tokens). The DuckDB oracle replays all eleven stages in one
+    CTE chain."""
     from webcrawler_spark.pipelines.funnel import COUNTS, funnel_counts
 
-    counts = funnel_counts(_docs(spark, sf), _lined_docs(spark, sf), quality_tier)
+    counts = funnel_counts(_docs(spark, sf), _lined_docs(spark, sf))
     return spark.createDataFrame(
         [tuple(counts[k] for k in COUNTS)],
         ", ".join(f"{k} long" for k in COUNTS),

@@ -179,6 +179,35 @@ def test_budget_limit_exact(spark, pages, simres):
     assert {r["url"] for r in fetched} <= set(simres.texts)
 
 
+@pytest.fixture(scope="module")
+def empty_crawl(spark, pages):
+    """A ``plans.crawl`` with a zero page budget over a caller's config;
+    returns (that config, the session)."""
+    from webcrawler_spark.plans.crawl import crawl
+
+    cfg = CrawlConfig(max_rounds=40)
+    return cfg, crawl(spark, pages, seeds_df(spark), limit=0, config=cfg)
+
+
+def test_crawl_limit_leaves_callers_config_alone(empty_crawl):
+    cfg, session = empty_crawl
+    assert cfg.limit is None
+    assert session.engine.cfg.limit == 0
+    assert session.total_fetched == 0
+
+
+def test_empty_crawl_pages_schema_matches_a_fetching_crawl(crawled, empty_crawl):
+    """A crawl that fetched nothing has no pages_fetched table; its
+    fallback has the columns, order and types of the written table."""
+    empty = empty_crawl[1].pages_fetched
+    assert empty.count() == 0
+
+    def cols(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert cols(empty) == cols(crawled.pages_fetched())
+
+
 def test_salted_selection_equivalent(spark, pages):
     """O9: mega-host salting (two-phase FIFO top-B) must not change the
     crawl outcome, only the physical plan."""

@@ -10,6 +10,8 @@ every library name they use. Starts no Spark session.
   name still exists, so deleting or renaming one fails here instead of
   breaking ``perfbench/run.py --trace 1``; and the funnel pipeline looks
   those stages up at call time, so the wrappers see its calls.
+* Oracles: every ``oracle_sql()`` key is a ``queries()`` key, and every
+  query without an oracle is named ``*_rowsonly``.
 """
 
 from __future__ import annotations
@@ -149,3 +151,15 @@ def test_funnel_pipeline_binds_no_stage_at_import():
                 if isinstance(n, ast.Attribute) and n.attr in fns
             ]
     assert not bound, bound
+
+
+def test_every_query_has_an_oracle_or_says_rowsonly():
+    """Every ``oracle_sql()`` entry replays a registered query, and a
+    query without one is named ``*_rowsonly``, so deleting a query or
+    its oracle cannot drop a value check without notice."""
+    import __spark_entry__ as entry
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    assert not set(oracles) - set(queries), sorted(set(oracles) - set(queries))
+    unchecked = sorted(set(queries) - set(oracles))
+    assert all(name.endswith("_rowsonly") for name in unchecked), unchecked

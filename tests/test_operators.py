@@ -139,61 +139,43 @@ def test_incremental_dedup_rounds_match_greedy_replay(spark):
 
 def test_simhash_hamming(docs):
     pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             dedup.simhash_near_pairs(docs, max_hamming=6).collect()}
+             dedup.hamming_near_pairs(
+                 dedup.simhash(docs), hash_col="simhash", max_hamming=6,
+                 n_bands=8, bits=32).collect()}
     assert pairs[(0, 3)] == 0       # identical text → identical sketch
     assert (0, 1) in pairs          # one-word change → few bits flip
     fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     assert all(0 <= v < (1 << 32) for v in fp.values())
 
 
-def test_simhash64_hamming_and_tier_parity(docs):
-    """Production 64-bit tier: same dup/non-dup verdicts as the 32-bit
-    oracle tier on the fixture, at the width-proportional threshold
-    (6/32 bits ≈ 16/64 bits; fixture distances: near-dups ≤ 13,
-    non-dups ≥ 24)."""
-    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
-    assert len(fp) == 6
-    # full signed-long bit pattern is in use (bit 63 assembled via OR)
-    assert all(-(1 << 63) <= v < (1 << 63) for v in fp.values())
-    assert fp[0] == fp[3]           # identical text → identical sketch
-    # deterministic across invocations (xxhash64 fixed seed)
-    fp2 = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
-    assert fp == fp2
+def test_simhash_band_guarantee(spark, docs):
+    """Pigeonhole on the 32-bit fingerprint: every pair within
+    max_hamming ≤ 3 is found (brute force over the fixture's simhashes
+    and over planted fingerprints whose differing bits sit in distinct
+    bytes), and max_hamming = 4 — where 0x00000000 and 0x01010101
+    share no byte — is refused."""
+    def brute(fp, k):
+        ids = sorted(fp)
+        return {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]
+                if bin(fp[a] ^ fp[b]).count("1") <= k}
 
-    pairs64 = {(r["a"], r["b"]): r["hamming"] for r in
-               dedup.simhash64_near_pairs(
-                   docs, max_hamming=16, n_bands=32).collect()}
-    assert pairs64[(0, 3)] == 0
-    assert (0, 1) in pairs64        # near-dup survives the 64-bit tier
-    assert (0, 2) not in pairs64    # different language stays apart
-    pairs32 = {(r["a"], r["b"]) for r in
-               dedup.simhash_near_pairs(docs, max_hamming=6).collect()}
-    # tier parity: both tiers separate the near-dup family {0,1,3,5}
-    # from everything else — every 32-bit pair survives at 64 bits, and
-    # neither tier emits a cross-family pair (exact set equality across
-    # independent hash widths is not a law: (1,5) sits at 14/64 bits
-    # but just over 6/32 bits)
-    family = {0, 1, 3, 5}
-    assert pairs32 <= set(pairs64)
-    assert all(a in family and b in family for a, b in pairs64)
-
-
-def test_simhash64_band_guarantee(docs):
-    """Pigeonhole: every pair within max_hamming of the DEFAULT 4-band
-    config is found (brute-force cross-check on the fixture), and the
-    guarantee precondition is enforced."""
-    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
-    want = set()
-    ids = sorted(fp)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            if bin((fp[a] ^ fp[b]) & ((1 << 64) - 1)).count("1") <= 3:
-                want.add((a, b))
+    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     got = {(r["a"], r["b"]) for r in
-           dedup.simhash64_near_pairs(docs, max_hamming=3).collect()}
-    assert got == want
+           dedup.simhash_near_pairs(docs, max_hamming=3).collect()}
+    assert got == brute(fp, 3)
+
+    # 0, then one bit in each of 1..4 distinct bytes, from two bases
+    planted = {}
+    for base in (0, 0xDEADBEEF):
+        for k in range(5):
+            planted[len(planted)] = base ^ (0x01010101 & ((1 << 8 * k) - 1))
+    hashes = spark.createDataFrame(list(planted.items()), "doc_id long, h long")
+    for k in range(4):
+        got = {(r["a"], r["b"]) for r in dedup.hamming_near_pairs(
+            hashes, max_hamming=k, n_bands=4, bits=32).collect()}
+        assert got == brute(planted, k), k
     with pytest.raises(ValueError):
-        dedup.simhash64_near_pairs(docs, max_hamming=4, n_bands=4)
+        dedup.simhash_near_pairs(docs, max_hamming=4)
 
 
 def test_ppm_roundtrip_and_header_robustness():
@@ -651,97 +633,11 @@ def test_keep_best_per_cluster_no_window_in_plan(spark):
     assert "partial_max_by" in plan.lower() or "partial" in plan.lower()
 
 
-def test_arrow_signature_tier_parity(spark):
-    """The zero-shuffle Arrow signature tier (one mapInPandas pass,
-    affine lanes over a single siphash base — no 5·10⁸-row explode)
-    must agree with the md5/oracle tier where it matters: the composed
-    near_duplicate_pairs output (candidates are Jaccard-verified either
-    way) and the rows-per-band subset law within the tier."""
-    from pyspark.sql import functions as F
-
-    from webcrawler_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures_arrow,
-        near_duplicate_pairs,
-    )
-
-    base = spark.range(60).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[
-                F.concat(F.lit(f"w{k}x"), (F.col("id") * 37 + k) % 101)
-                for k in range(25)
-            ],
-        ).alias("text"),
-    )
-    dup = base.where("doc_id % 6 = 0").select(
-        (F.col("doc_id") + 5000).alias("doc_id"),
-        F.concat("text", F.lit(" tailword")).alias("text"),
-    )
-    docs = base.unionByName(dup)
-
-    exact_nd = {
-        (r["a"], r["b"], r["jaccard"])
-        for r in near_duplicate_pairs(docs, threshold=0.8).collect()
-    }
-    arrow_nd = {
-        (r["a"], r["b"], r["jaccard"])
-        for r in near_duplicate_pairs(
-            docs, threshold=0.8, signature_tier="arrow"
-        ).collect()
-    }
-    planted = {(i, i + 5000) for i in range(0, 60, 6)}
-    assert planted <= {(a, b) for a, b, _ in arrow_nd}
-    assert arrow_nd == exact_nd  # deterministic on this fixture
-
-    # the Arrow VERIFY tier (in-row Jaccard over pair-joined texts, no
-    # shingle explode) is row-identical to the explode-join verify —
-    # same candidates in, same Jaccard math, same rounding
-    arrow_full = {
-        (r["a"], r["b"], r["jaccard"])
-        for r in near_duplicate_pairs(
-            docs, threshold=0.8,
-            signature_tier="arrow", verify_tier="arrow",
-        ).collect()
-    }
-    assert arrow_full == exact_nd
-    # and with the oracle-tier candidates too (verify tier alone)
-    verify_only = {
-        (r["a"], r["b"], r["jaccard"])
-        for r in near_duplicate_pairs(
-            docs, threshold=0.8, verify_tier="arrow"
-        ).collect()
-    }
-    assert verify_only == exact_nd
-
-    # schema + per-doc row shape matches the exact tier
-    sig = minhash_signatures_arrow(docs)
-    assert sig.columns == ["doc_id", "band_id", "band_min"]
-    per_doc = sig.groupBy("doc_id").count().select("count").distinct().collect()
-    assert [r["count"] for r in per_doc] == [4]
-
-    # subset law inside the arrow tier (shared r=0 lane constants)
-    loose = {
-        (r["a"], r["b"])
-        for r in lsh_candidate_pairs(
-            docs, signature_tier="arrow"
-        ).collect()
-    }
-    strict = {
-        (r["a"], r["b"])
-        for r in lsh_candidate_pairs(
-            docs, rows_per_band=3, signature_tier="arrow"
-        ).collect()
-    }
-    assert strict <= loose
-    assert planted <= strict
-
-
-def test_verify_tiers_round_halfway_jaccard_alike(spark):
-    """At a binary-exact halfway Jaccard (65/128 = 0.5078125) the Arrow
-    verify tier rounds HALF_UP like the exact tier's F.round."""
-    from webcrawler_spark.operators.dedup import near_duplicate_pairs
+def test_near_dup_rounds_halfway_jaccard_half_up(spark):
+    """At a binary-exact halfway Jaccard (65/128 = 0.5078125) the
+    candidate-bounded verify of ``near_duplicate_pairs`` and the
+    standalone ``jaccard_pairs`` self-join both round HALF_UP."""
+    from webcrawler_spark.operators.dedup import jaccard_pairs, near_duplicate_pairs
 
     # 99 and 98 distinct words sharing a 67-word prefix: 97 and 96
     # 3-word shingles, 65 shared, union 128
@@ -751,17 +647,15 @@ def test_verify_tiers_round_halfway_jaccard_alike(spark):
     docs = spark.createDataFrame(
         [(1, " ".join(a)), (2, " ".join(b))], "doc_id long, text string"
     )
-    got = {
-        tier: [
-            (r["a"], r["b"], r["jaccard"])
-            for r in near_duplicate_pairs(
-                docs, bands=32, threshold=0.5, verify_tier=tier
-            ).collect()
-        ]
-        for tier in ("exact", "arrow")
-    }
-    assert got["exact"] == [(1, 2, 0.507813)]
-    assert got["arrow"] == got["exact"]
+    got = [
+        (r["a"], r["b"], r["jaccard"])
+        for r in near_duplicate_pairs(docs, bands=32, threshold=0.5).collect()
+    ]
+    assert got == [(1, 2, 0.507813)]
+    assert [
+        (r["a"], r["b"], r["jaccard"])
+        for r in jaccard_pairs(docs, threshold=0.5).collect()
+    ] == got
 
 
 def test_lsh_rows_per_band_subset_law(spark):
@@ -772,6 +666,7 @@ def test_lsh_rows_per_band_subset_law(spark):
 
     from webcrawler_spark.operators.dedup import (
         lsh_candidate_pairs,
+        minhash_signatures,
         near_duplicate_pairs,
     )
 
@@ -798,10 +693,18 @@ def test_lsh_rows_per_band_subset_law(spark):
     assert strict <= loose
     planted = {(i, i + 1000) for i in range(0, 40, 8)}
     assert planted <= strict  # J=(n-2)/(n-1)≈0.97 → J³≈0.9/band
-    pairs = {
-        (r["a"], r["b"])
-        for r in near_duplicate_pairs(
-            docs, threshold=0.8, rows_per_band=3
-        ).collect()
-    }
-    assert planted <= pairs
+    for rows_per_band in (1, 3):
+        pairs = {
+            (r["a"], r["b"])
+            for r in near_duplicate_pairs(
+                docs, threshold=0.8, rows_per_band=rows_per_band
+            ).collect()
+        }
+        assert planted <= pairs, rows_per_band
+
+    # one (doc, band) row per band, whatever rows_per_band is
+    for rows_per_band in (1, 3):
+        sig = minhash_signatures(docs, rows_per_band=rows_per_band)
+        assert sig.columns == ["doc_id", "band_id", "band_min"]
+        per_doc = sig.groupBy("doc_id").count().select("count").distinct()
+        assert [r["count"] for r in per_doc.collect()] == [4]

@@ -1,24 +1,40 @@
-"""Tier equivalence as a property: two tiers of one operator must return
+"""Tier equivalence as a property: two paths to one law must return
 identical rows on generated inputs, not only on hand-picked fixtures.
 
-Near-dup verify (``near_duplicate_pairs``): the exact tier counts
-shingle intersections with joins and rounds with Spark's ``F.round``;
-the Arrow tier computes the shingle sets in Python. Both round the
-Jaccard to 6 decimals HALF_UP, so the generator plants Jaccards that sit
+Near-dup verify (``near_duplicate_pairs``): the candidate-bounded
+verify counts each LSH candidate's shingle intersection by joining the
+pair list against both sides' shingles; the standalone ``jaccard_pairs``
+self-joins the whole shingle table. Restricted to the LSH candidates
+(``lsh_candidate_pairs``) the two must agree row for row, Jaccard
+rounded to 6 decimals HALF_UP, so the generator plants Jaccards that sit
 exactly halfway at the 7th decimal: k/128 and k/640 for odd k.
+
+Seen anti-join (``anti_join_with_bloom``): the Bloom pre-pass routes
+"maybe seen" candidates through the exact join and passes the rest
+through, so its output is ``candidates.join(seen, 'left_anti')`` as a
+multiset: duplicate candidates survive as often as they came in, an
+empty ``seen`` passes everything, and a tiny bitmap (every candidate a
+false positive) loses nothing, under both probe modes.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from webcrawler_spark.operators.dedup import near_duplicate_pairs
+from webcrawler_spark.operators.bloom import anti_join_with_bloom
+from webcrawler_spark.operators.dedup import (
+    jaccard_pairs,
+    lsh_candidate_pairs,
+    near_duplicate_pairs,
+)
 
 THRESHOLD = 0.3
+BANDS = 32
 
 
 @st.composite
@@ -63,25 +79,59 @@ def _docs(halfway, free):
     halfway=st.lists(_halfway_pair(), min_size=1, max_size=3),
     free=st.lists(_free_pair, max_size=3),
 )
-# 323/640 = 0.5046875: scaling by 1e6 before rounding gives 0.504687
+# 323/640 = 0.5046875: scaling by 1e6 before rounding gives 0.504687;
+# 65/128 = 0.5078125: half-even rounding gives 0.507812
 @example(halfway=[(323, 640, 159, 158), (65, 128, 32, 31)], free=[])
 @settings(max_examples=2, deadline=None)
-def test_near_dup_verify_tiers_identical(spark, halfway, free):
+def test_near_dup_equals_jaccard_on_lsh_candidates(spark, halfway, free):
     rows, want = _docs(halfway, free)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact, arrow = (
-        near_duplicate_pairs(
-            docs, bands=32, threshold=THRESHOLD, verify_tier=tier
-        ).withColumn("tier", F.lit(tier))
-        for tier in ("exact", "arrow")
+    bounded = near_duplicate_pairs(docs, bands=BANDS, threshold=THRESHOLD)
+    full = jaccard_pairs(docs, threshold=THRESHOLD).join(
+        lsh_candidate_pairs(docs, bands=BANDS), ["a", "b"], "left_semi"
     )
-    got = {"exact": [], "arrow": []}
-    for r in exact.unionByName(arrow).collect():  # one action per example
+    got = {"bounded": [], "full": []}
+    tagged = bounded.withColumn("tier", F.lit("bounded")).unionByName(
+        full.withColumn("tier", F.lit("full"))
+    )
+    for r in tagged.collect():  # one action per example
         got[r["tier"]].append((r["a"], r["b"], r["jaccard"]))
     got = {tier: sorted(pairs) for tier, pairs in got.items()}
-    assert got["arrow"] == got["exact"]
+    assert got["bounded"] == got["full"]
     # every planted halfway pair is found (Jaccard >= 0.3 over 32 bands
     # misses with probability <= 0.7^32) and rounded HALF_UP
-    found = {(a, b): j for a, b, j in got["exact"]}
+    found = {(a, b): j for a, b, j in got["bounded"]}
     for pair, j in want.items():
         assert found.get(pair) == j, (pair, found.get(pair), j)
+
+
+_url = st.integers(0, 30).map(lambda i: f"https://h{i % 4}.x/p{i}")
+
+
+@given(
+    cand=st.lists(_url, max_size=40),
+    seen=st.lists(_url, max_size=30),
+    m_bits=st.sampled_from([64, 128, 4096]),
+)
+@example(cand=["https://h0.x/p0"] * 3 + ["https://h1.x/p1"], seen=[], m_bits=64)
+@example(
+    cand=[f"https://h{i % 4}.x/p{i}" for i in range(12)] * 2,
+    seen=[f"https://h{i % 4}.x/p{i}" for i in range(0, 31, 2)],
+    m_bits=64,
+)
+@settings(max_examples=2, deadline=None)
+def test_bloom_anti_join_matches_left_anti(spark, cand, seen, m_bits):
+    cand_df = spark.createDataFrame(
+        [(u, i % 3) for i, u in enumerate(cand)], "url string, k int"
+    )
+    seen_df = spark.createDataFrame([(u,) for u in seen], "url string")
+    want = Counter(
+        tuple(r) for r in cand_df.join(seen_df, "url", "left_anti").collect()
+    )
+    assert sum(want.values()) == sum(u not in set(seen) for u in cand)
+    for mode in ("broadcast", "shard_join"):
+        out = anti_join_with_bloom(
+            cand_df, seen_df, "url", m_bits=m_bits, n_shards=4, mode=mode
+        )
+        got = Counter(tuple(r) for r in out.select("url", "k").collect())
+        assert got == want, mode

@@ -351,6 +351,12 @@ _SEEN_SCHEMA = (
     "url string, host string, bucket int, fetched boolean, round int,"
     " attempt_ts double, discovered_seq long"
 )
+# the pages_fetched rows ``_write_fetched`` appends, in its column order
+_PAGES_SCHEMA = (
+    "url string, host string, depth int, priority double, text string,"
+    " title string, first20 string, links array<string>, n_links int,"
+    " fetch_ts double, round int, part_id int"
+)
 # trap-filter state (only written when cfg.trap_filter): per-host HLL
 # registers of content digests (xxhash64 production tier — bucket is a
 # bigint pmod) and per-host fetched counts; both append one small delta
@@ -1490,11 +1496,7 @@ class CrawlEngine:
     def pages_fetched(self) -> DataFrame:
         df = self.cat.read("pages_fetched")
         if df is None:
-            return self.spark.createDataFrame(
-                [], "url string, host string, depth int, text string,"
-                " title string, first20 string, fetch_ts double, round int,"
-                " part_id int, n_links int"
-            )
+            return self.spark.createDataFrame([], _PAGES_SCHEMA)
         return df
 
     def seen(self) -> DataFrame:

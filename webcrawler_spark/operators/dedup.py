@@ -5,7 +5,8 @@ implemented Spark-first (native expressions; shuffles only on the keys
 that need them) and — except where noted — reproducibly enough that a
 DuckDB ANSI-SQL oracle computes identical rows (the md5-based hash
 family is used precisely because both engines share it bit-for-bit;
-xxhash64 exists only in Spark).
+xxhash64 exists only in Spark). Each near-duplicate law has one
+implementation, the md5-family one the oracles replay.
 
 Scale notes (100 TB corpus):
 * exact dedup is one hash-aggregate: map-side partial min/count, one
@@ -21,14 +22,10 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators.textstats import fingerprint, sliding_ngrams
-
-_MICRO = Decimal("0.000001")  # the verify tiers' 6-decimal Jaccard rounding
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -162,105 +159,6 @@ def minhash_signatures(
     )
 
 
-def _splitmix64(x: int) -> int:
-    """Deterministic 64-bit mix (Steele/Lea/Flood splitmix64, public
-    domain) — derives the per-lane affine constants below without any
-    runtime RNG state."""
-    x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-    return x ^ (x >> 31)
-
-
-def _lane_consts(b: int, r: int) -> tuple[int, int]:
-    """(multiplier, offset) for band ``b`` row ``r``. Keyed so the r=0
-    lane is identical for every rows_per_band — the subset law (strict
-    collision ⇒ loose collision) holds in this tier by construction,
-    same as the md5 tier's shared row-0 salt."""
-    key = (b << 20) | r
-    a = _splitmix64(key * 2 + 1) | 1  # odd ⇒ bijective mod 2^64
-    c = _splitmix64(key * 2 + 2)
-    return a, c
-
-
-def minhash_signatures_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 1,
-) -> DataFrame:
-    """SCALE tier of :func:`minhash_signatures`: identical output
-    shape (one (doc, band_id, band_min) row per band), computed in ONE
-    Arrow ``mapInPandas`` pass with ZERO shuffle.
-
-    Why it exists (round-4 scale stress): the md5/oracle tier explodes
-    every shingle (~5·10⁸ rows on the 126k-doc crawl corpus) and runs
-    ``bands`` md5 minimums through a corpus-wide hash aggregate —
-    correct, map-side-combined, but the single most expensive stage in
-    the system (145.7 s for candidates on that corpus). Here each task
-    computes its partitions' signatures in-row: vectorized shingle
-    construction + ONE siphash per distinct shingle
-    (``pandas.util.hash_array``, Cython, deterministic fixed key) and
-    ``bands × rows_per_band`` affine lanes h(s) = a·x + c (mod 2⁶⁴)
-    over that base hash — the classic one-hash-many-permutations
-    MinHash (Broder 1997). Nothing leaves the task but the tiny
-    signature rows.
-
-    The hash family necessarily differs from the DuckDB-replayable md5
-    family, so this tier is NOT the oracle tier; the composed
-    ``near_duplicate_pairs`` output is parity-tested against the exact
-    tier (candidates are verified by exact Jaccard either way, so tier
-    choice only moves the recall knee, and planted near-dups collide
-    under both)."""
-    import numpy as np
-    import pandas as pd
-    from pandas.util import hash_array
-
-    consts = [
-        _lane_consts(b, r) for b in range(bands) for r in range(rows_per_band)
-    ]
-    a_vec = np.array([a for a, _ in consts], dtype=np.uint64)
-    c_vec = np.array([c for _, c in consts], dtype=np.uint64)
-    id_field = df.schema[id_col]
-
-    def gen(batches):
-        for pdf in batches:
-            ids, bids, mins = [], [], []
-            for i, txt in zip(pdf[id_col].values, pdf[text_col].values):
-                if txt is None:
-                    continue
-                words = txt.split(" ")
-                if len(words) < n:
-                    continue
-                shingles = {
-                    " ".join(words[j : j + n])
-                    for j in range(len(words) - n + 1)
-                }
-                base = hash_array(
-                    np.array(list(shingles), dtype=object)
-                ).astype(np.uint64)
-                # lanes: (k, n_shingles) affine images, wrap mod 2^64
-                lanes = (
-                    base[None, :] * a_vec[:, None] + c_vec[:, None]
-                ).min(axis=1)
-                for b in range(bands):
-                    row = lanes[b * rows_per_band : (b + 1) * rows_per_band]
-                    ids.append(i)
-                    bids.append(str(b))
-                    mins.append("|".join(format(int(v), "016x") for v in row))
-            yield pd.DataFrame(
-                {id_col: ids, "band_id": bids, "band_min": mins}
-            )
-
-    out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()},"
-        " band_id string, band_min string"
-    )
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -268,23 +166,14 @@ def lsh_candidate_pairs(
     n: int = 3,
     bands: int = 4,
     rows_per_band: int = 1,
-    signature_tier: str = "exact",
 ) -> DataFrame:
     """Distinct (a, b) with a < b sharing ≥1 MinHash band bucket.
 
     The join key is (band_id, band_min): Jaccard-similar docs collide
     with high probability; the full doc×doc cross join never exists.
     ``rows_per_band`` — see minhash_signatures (the S-curve knob).
-    ``signature_tier`` — "exact" (md5 family, DuckDB-replayable) or
-    "arrow" (one zero-shuffle Arrow pass; see
-    :func:`minhash_signatures_arrow`).
     """
-    sigfn = (
-        minhash_signatures_arrow
-        if signature_tier == "arrow"
-        else minhash_signatures
-    )
-    sig = sigfn(df, id_col, text_col, n, bands, rows_per_band)
+    sig = minhash_signatures(df, id_col, text_col, n, bands, rows_per_band)
     left = sig.select(
         F.col(id_col).alias("a"), "band_id", "band_min"
     )
@@ -304,6 +193,45 @@ def lsh_candidate_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _shingle_sizes(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, sz): distinct-shingle count per doc of an exploded table."""
+    return sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+
+
+def _candidate_intersections(
+    cand: DataFrame, sh: DataFrame, id_col: str
+) -> DataFrame:
+    """(a, b, inter) over DISTINCT candidate pairs: each pair joins only
+    its own two shingle lists, so rows are Σ|shingles(a)| over the
+    candidates and the corpus never self-joins (a hot shingle cannot
+    explode the plan the way a shingle-keyed self-join can)."""
+    return (
+        cand.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
+        .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("inter"))
+    )
+
+
+def _jaccard_rows(
+    inter: DataFrame, sizes: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(a, b, jaccard ≥ threshold): the union by inclusion-exclusion,
+    rounded to 6 decimals HALF_UP (``F.round``, as DuckDB's round)."""
+    return (
+        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza")), "a")
+        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb")), "b")
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -317,7 +245,6 @@ def jaccard_pairs(
     give the union by inclusion-exclusion. Exact (not sketched).
     """
     sh = explode_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     inter = (
         sh.select(F.col(id_col).alias("a"), "shingle")
         .join(sh.select(F.col(id_col).alias("b"), "shingle"), "shingle")
@@ -325,18 +252,7 @@ def jaccard_pairs(
         .groupBy("a", "b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _jaccard_rows(inter, _shingle_sizes(sh, id_col), id_col, threshold)
 
 
 def containment_pairs(
@@ -367,7 +283,7 @@ def containment_pairs(
     are row-identical on pairs the candidate set contains
     (tested)."""
     sh = explode_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = _shingle_sizes(sh, id_col)
     if candidates is None:
         inter = (
             sh.select(F.col(id_col).alias("a"), "shingle")
@@ -380,12 +296,8 @@ def containment_pairs(
         # LSH bucket joins emit a pair once per colliding band — distinct
         # first, or the intersection count multiplies by the band count
         # and containment can exceed 1 (breaking exact-tier row-identity).
-        inter = (
-            candidates.select("a", "b").distinct()
-            .join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-            .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("inter"))
+        inter = _candidate_intersections(
+            candidates.select("a", "b").distinct(), sh, id_col
         )
     return (
         inter.join(
@@ -405,123 +317,28 @@ def near_duplicate_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     rows_per_band: int = 1,
-    signature_tier: str = "exact",
-    verify_tier: str = "exact",
 ) -> DataFrame:
     """Composed dedup pipeline: LSH candidates → exact Jaccard verify.
 
     This is the form a 100 TB dedup actually runs: the shingle table is
     NEVER self-joined. The candidate pair set is fixed first (banded
-    MinHash bucket join, candidate-bounded), then exact Jaccard is
-    computed per candidate pair by one of two tiers:
+    MinHash bucket join, :func:`lsh_candidate_pairs`), then each
+    candidate's intersection is counted by joining the pair list
+    against each side's exploded shingles (candidate-bounded, the same
+    count ``containment_pairs(candidates=…)`` takes), and the Jaccard
+    is rounded and cut exactly as in :func:`jaccard_pairs`.
 
-    * ``verify_tier="exact"`` (oracle tier): intersection counts via
-      joining the pair list against each side's exploded shingles —
-      row counts are Σ|shingles(a)| over candidate pairs, so a hot
-      shingle key cannot explode the plan the way the standalone
-      ``jaccard_pairs`` self-join can, but every candidate's shingles
-      are still exploded and shuffled.
-    * ``verify_tier="arrow"`` (scale tier): both texts join onto the
-      (tiny) pair list — two scan-shaped broadcast joins, the corpus
-      never shuffles — and one Arrow ``mapInPandas`` pass computes the
-      shingle sets and exact Jaccard in-row. Zero exploded rows; the
-      per-pair work is O(|a| + |b|). The Jaccard VALUE is identical
-      math (distinct-shingle sets, round 6), so given the same
-      candidates the two tiers are row-identical (tested).
-
-    Output matches ``jaccard_pairs`` restricted to the LSH candidate
-    set: (a, b, jaccard) with jaccard ≥ threshold.
+    Output equals ``jaccard_pairs`` restricted to the LSH candidate
+    set: (a, b, jaccard) with jaccard ≥ threshold (a hypothesis
+    property in tests/test_tier_equivalence.py).
     """
-    cand = lsh_candidate_pairs(
-        df, id_col, text_col, n, bands, rows_per_band, signature_tier
-    )
-    if verify_tier == "arrow":
-        return _jaccard_verify_arrow(df, cand, id_col, text_col, n, threshold)
+    cand = lsh_candidate_pairs(df, id_col, text_col, n, bands, rows_per_band)
     sh = explode_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    inter = (
-        cand.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-        .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(
-            sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza")), "a"
-        )
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-
-
-def _jaccard_verify_arrow(
-    df: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-) -> DataFrame:
-    """Arrow verify tier: join both texts onto the candidate pairs
-    (scan-shaped — the pair list is the small side of both joins),
-    then one in-row pass computes |A∩B| / |A∪B| over the distinct
-    word-shingle sets. Candidate pairs after banding are rare
-    (S-curve), so the pair×text table is tiny even when the corpus is
-    not."""
-    import pandas as pd
-
-    texts_a = df.select(
-        F.col(id_col).alias("a"), F.col(text_col).alias("_ta")
-    )
-    texts_b = df.select(
-        F.col(id_col).alias("b"), F.col(text_col).alias("_tb")
-    )
-    paired = cand.join(texts_a, "a").join(texts_b, "b")
-
-    def gen(batches):
-        for pdf in batches:
-            out_a, out_b, out_j = [], [], []
-            for a, b, ta, tb in zip(
-                pdf["a"].values, pdf["b"].values,
-                pdf["_ta"].values, pdf["_tb"].values,
-            ):
-                wa = ta.split(" ") if ta is not None else []
-                wb = tb.split(" ") if tb is not None else []
-                sa = {
-                    " ".join(wa[i : i + n]) for i in range(len(wa) - n + 1)
-                }
-                sb = {
-                    " ".join(wb[i : i + n]) for i in range(len(wb) - n + 1)
-                }
-                union = len(sa | sb)
-                if union == 0:
-                    continue
-                # HALF_UP on the double's shortest decimal string, like
-                # the exact tier's F.round (Scala BigDecimal(d)): Python's
-                # round() is half-even (65/128 would give 0.507812), and
-                # scaling by 1e6 first is inexact (323/640 = 0.5046875
-                # would give 0.504687)
-                j = float(
-                    Decimal(repr(len(sa & sb) / union)).quantize(
-                        _MICRO, ROUND_HALF_UP
-                    )
-                )
-                if j >= threshold:
-                    out_a.append(a)
-                    out_b.append(b)
-                    out_j.append(j)
-            yield pd.DataFrame({"a": out_a, "b": out_b, "jaccard": out_j})
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    return paired.mapInPandas(
-        gen, f"a {id_t}, b {id_t}, jaccard double"
+    return _jaccard_rows(
+        _candidate_intersections(cand, sh, id_col),
+        _shingle_sizes(sh, id_col),
+        id_col,
+        threshold,
     )
 
 
@@ -574,110 +391,17 @@ def simhash_near_pairs(
 
     Pigeonhole banding: a 32-bit key split into 4 bytes; hamming ≤ 3
     forces at least one byte to match exactly, so candidates join on
-    (byte_idx, byte_val) — no cross join — then verify with xor+popcount.
-    """
-    fp = simhash(df, id_col, text_col)
-    banded = fp.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("byte_idx"),
-                        F.shiftright(F.col("simhash"), 8 * i)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("byte_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "simhash", "band.byte_idx", "band.byte_val")
-    left = banded.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("ha"), "byte_idx", "byte_val"
-    )
-    right = banded.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("hb"), "byte_idx", "byte_val"
-    )
-    return (
-        left.join(right, ["byte_idx", "byte_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.expr("ha ^ hb")).alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# -- 64-bit production tier -------------------------------------------------
-#
-# The 32-bit tier above trades fingerprint width for a DuckDB-shareable
-# oracle (md5-derived word hashes). Production simhash dedup runs at 64
-# bits — at sub-32-bit widths random fingerprint collisions start to
-# rival true near-duplicates on 10^9-document corpora. This tier uses
-# native xxhash64 word hashes (JVM codegen, no md5 string round-trip)
-# and wider pigeonhole bands; its pair set is cross-checked against the
-# 32-bit oracle tier on fixtures in tests/test_operators.py.
-
-SIMHASH64_BITS = 64
-
-
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash:long) — Charikar sketch at the production 64-bit
-    width, word hashes via native ``xxhash64``.
-
-    Same one-explode + one-hash-aggregate shape as :func:`simhash`;
-    the sign vector packs into the full signed-long bit pattern (bit 63
-    included, assembled with bitwise OR so ANSI overflow rules never
-    apply)."""
-    words = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("w"),
-    ).withColumn("h", F.xxhash64(F.col("w")))
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(SIMHASH64_BITS)
-    ]
-    agg = words.groupBy(id_col).agg(*bit_sums)
-    fp = F.lit(0).cast("long")
-    for i in range(SIMHASH64_BITS):
-        term = F.when(
-            F.col(f"s{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        fp = fp.bitwiseOR(term)
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
-def simhash64_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-) -> DataFrame:
-    """(a, b, hamming) pairs with hamming(simhash64) ≤ max_hamming.
-
-    Pigeonhole banding on the 64-bit key: ``max_hamming`` differing
-    bits can dirty at most ``max_hamming`` of the ``n_bands`` bands, so
-    ``max_hamming < n_bands`` guarantees one band matches exactly and
-    the candidate join stays an equi-join on (band_idx, band_val) — no
-    cross join. Default 4×16-bit bands: the wider band value space cuts
-    random band collisions ~256× vs the 32-bit tier's 8-bit bytes, so
-    the verify stage sees far fewer false candidates at corpus scale.
+    (byte_idx, byte_val) — no cross join — then verify with xor+popcount
+    (:func:`hamming_near_pairs`, which rejects ``max_hamming ≥ 4``: two
+    fingerprints 4 bits apart can differ in every byte).
     """
     return hamming_near_pairs(
-        simhash64(df, id_col, text_col),
+        simhash(df, id_col, text_col),
         id_col=id_col,
         hash_col="simhash",
         max_hamming=max_hamming,
-        n_bands=n_bands,
-        bits=SIMHASH64_BITS,
+        n_bands=4,
+        bits=SIMHASH_BITS,
     )
 
 
@@ -946,14 +670,12 @@ def hamming_near_pairs(
     bits: int = 64,
 ) -> DataFrame:
     """Generic pigeonhole band join for ANY 64-bit-or-less fingerprint
-    column: (a, b, hamming) pairs with hamming ≤ max_hamming. The
-    simhash64_near_pairs candidate machinery factored for reuse by
-    other fingerprint families (simhash64_near_pairs delegates here;
-    image dHash and the audio fingerprint in operators/multimodal.py
-    are the other clients): max_hamming < n_bands guarantees one band
-    matches exactly, so candidates come from an equi-join on
-    (band_idx, band_val) — never a cross join — and the exact popcount
-    verify is candidate-bounded."""
+    column: (a, b, hamming) pairs with hamming ≤ max_hamming. Clients:
+    :func:`simhash_near_pairs` (32 bits, 4 byte bands), image dHash and
+    the audio fingerprint in operators/multimodal.py. max_hamming <
+    n_bands guarantees one band matches exactly, so candidates come
+    from an equi-join on (band_idx, band_val) — never a cross join —
+    and the exact popcount verify is candidate-bounded."""
     if max_hamming >= n_bands:
         raise ValueError(
             f"pigeonhole guarantee needs max_hamming < n_bands"

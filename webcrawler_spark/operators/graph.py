@@ -214,24 +214,20 @@ def duplicate_clusters(
     bands: int = 4,
     threshold: float = 0.5,
     rows_per_band: int = 1,
-    signature_tier: str = "exact",
-    verify_tier: str = "exact",
 ) -> DataFrame:
     """(doc_id, component) for EVERY document: near-duplicate pairs
     (LSH candidates → Jaccard verify, see dedup.near_duplicate_pairs)
     chained into clusters; docs in no pair form singleton clusters.
 
     component = min doc id of the cluster — the canonical survivor a
-    training-data pipeline keeps. ``rows_per_band`` /
-    ``signature_tier`` / ``verify_tier`` pass through to the LSH +
-    verify stages (the S-curve and Arrow scale knobs; defaults
-    preserve the oracle tier).
+    training-data pipeline keeps. ``rows_per_band`` passes through to
+    the LSH stage (the S-curve knob; the default 1 is what the oracle
+    replays).
     """
     from webcrawler_spark.operators.dedup import near_duplicate_pairs
 
     pairs = near_duplicate_pairs(
-        docs, id_col, text_col, n, bands, threshold,
-        rows_per_band, signature_tier, verify_tier,
+        docs, id_col, text_col, n, bands, threshold, rows_per_band
     )
     cc = connected_components(pairs.select("a", "b"), "a", "b")
     return (

@@ -12,7 +12,10 @@ exact mirror (+10^9), doc_id % 41 docs a one-word near-dup variant
 cleaned doc_id % 50 slice doubles as the eval suite the decontamination
 stage removes. Models are fit OFFLINE on the raw corpus (NB langid on
 the even-doc_id half, the unigram LM on all of it — the CCNet shape)
-and applied to the in-flight cleaned text.
+and applied to the in-flight cleaned text. Every stage has one
+implementation, the one the DuckDB oracle replays: the near-dup stage
+is the md5-family MinHash-LSH with the exact Jaccard verify, and the LM
+gate keeps the total-ordered top ceil(2n/3).
 
 Each stage is the audited plan of its standalone operator (codegen
 projections, digest-keyed dedup shuffle, banded LSH joins, broadcast
@@ -56,19 +59,13 @@ def _rows():
     return F.count(F.lit(1))
 
 
-def funnel_counts(
-    docs: DataFrame, lined_docs: DataFrame, quality_tier: str = "exact"
-) -> dict[str, int]:
+def funnel_counts(docs: DataFrame, lined_docs: DataFrame) -> dict[str, int]:
     """Run the funnel over ``docs`` (doc_id, text, lang, source) and its
     line-structured twin ``lined_docs`` (doc_id, text); returns the
     ``COUNTS`` survivor counts in stage order.
 
-    The LM quality gate (stage 7) has two tiers: "exact" (the oracle
-    tier) keeps the total-ordered top ceil(2n/3) on (score desc,
-    doc_id); "approx" (the scale tier) keeps scores at or above one
-    Greenwald–Khanna 1/3 quantile, a scan-local filter with no global
-    sort. Ties AT the threshold all survive, so the approx survivor set
-    is a superset of the exact one."""
+    The LM quality gate (stage 7) keeps the total-ordered top
+    ceil(2n/3) on (score desc, doc_id), the cut the oracle replays."""
     from webcrawler_spark.operators import (
         cleaning,
         dedup,
@@ -166,22 +163,14 @@ def funnel_counts(
     )
 
     # stage 7: CCNet LM head+middle — keep the top 2/3 by unigram
-    # logprob under the raw-corpus model (tiers: docstring)
+    # logprob under the raw-corpus model
     scores = stage(textstats.unigram_logprob(lg, model_docs=docs), n_scored=_rows())
-    if quality_tier == "approx":
-        qs = scores.approxQuantile("avg_logp", [1.0 / 3.0], 0.001)
-        # approxQuantile returns [] on an empty scored set — then the
-        # gate is trivially empty-in/empty-out
-        top = (
-            scores.where(F.col("avg_logp") >= qs[0]) if qs else scores
-        ).select("doc_id")
-    else:
-        k_keep = -(-2 * n["n_scored"] // 3)  # ceil(2n/3)
-        top = (
-            scores.orderBy(F.col("avg_logp").desc(), "doc_id")
-            .limit(k_keep)
-            .select("doc_id")
-        )
+    k_keep = -(-2 * n["n_scored"] // 3)  # ceil(2n/3)
+    top = (
+        scores.orderBy(F.col("avg_logp").desc(), "doc_id")
+        .limit(k_keep)
+        .select("doc_id")
+    )
     lq = stage(lg.join(top, "doc_id", "left_semi"), n_quality=_rows())
     free(scores)
 

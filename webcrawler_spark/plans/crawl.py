@@ -8,7 +8,7 @@ session is deterministic and cluster-friendly.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,7 +62,7 @@ def crawl(
     """
     cfg = config or CrawlConfig(limit=limit)
     if config is not None and limit is not None:
-        cfg.limit = limit
+        cfg = replace(config, limit=limit)
     cat = (
         ParquetCatalog(spark, catalog_root)
         if catalog_root

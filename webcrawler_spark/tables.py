@@ -505,13 +505,8 @@ class IcebergCatalog:
     def _append(self, name: str, df: DataFrame, max_records_per_file: int):
         if not self._exists(name):
             return self.overwrite(name, df)
-        w = df.writeTo(self._fqn(name))
-        if max_records_per_file:
-            # O7 rotation: Iceberg sizes files in bytes, not records;
-            # fanout-per-file is bounded by the table's
-            # write.target-file-size-bytes property set at creation
-            pass
-        w.append()
+        # max_records_per_file unused: Iceberg sizes files by write.target-file-size-bytes
+        df.writeTo(self._fqn(name)).append()
         with self._lock:
             self._known.add(name)
         return None
